@@ -223,15 +223,7 @@ object BatchPipeline {
   def main(args: Array[String]): Unit = {
     val src = args(0)
     val work = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", 16 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // args: src work [stageDir|-] [piiPolicy] [shardFormat]
     try run(spark, src, work,
       stageDir = if (args.length > 2 && args(2) != "-") Some(args(2)) else None,
@@ -276,21 +268,43 @@ object BatchPipeline {
   /** Staged raw front door per src, synthesized once per JVM: fixture
    * synthesis is not the pipeline under test, so repeated gate/bench runs
    * of the chain re-run the PIPELINE (front-door parse included), not the
-   * fixture writer. Keyed by src; computeIfAbsent keeps it race-safe. */
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+   * fixture writer. */
   private[graft] def stagedOnce(spark: SparkSession, src: String): (String, String) =
-    stageCache.computeIfAbsent(src, { _ =>
+    Harness.once("pipe_stage", src) {
       val work = java.nio.file.Files
         .createTempDirectory("graft_pipe_stage").toString
       stageFrontDoor(spark, src, work)
-    })
+    }
+
+  /** The chain's unpersisted base frame (front doors parsed, HTML
+   * extracted and repaired, URLs canonicalized, tok + domain) and the two
+   * quarantine frames; [[runChain]] persists the base. */
+  private[graft] def ingest(spark: SparkSession, warcDir: String,
+      jsonlDir: String): (DataFrame, DataFrame, DataFrame) = {
+    import graft.pipeline.Text
+    val (warcRows, warcBad) = graft.sources.Warc.read(spark, warcDir)
+    val (jsonlRows, jsonlBad) = graft.sources.Jsonl.read(spark, jsonlDir,
+      org.apache.spark.sql.types.StructType.fromDDL("url STRING, html STRING"))
+    val base = warcRows.select(col("url"), col("text").as("html"))
+      .unionAll(jsonlRows.select(col("url"), col("html")))
+      .select(
+        xxhash64(col("url")).as("ingest_id"),
+        Text.urlCanonicalize(col("url")).as("url"),
+        Text.fixEncoding(
+          Text.extractHtml(col("html"), maxLinkDensity = 0.5)).as("text"))
+      .withColumn("tok", Text.tokenCount(col("text")))
+      .withColumn("domain", Text.registrableDomain(col("url")))
+    (base, warcBad, jsonlBad)
+  }
 
   /**
    * The LAZY pre-checkpoint gates frame: tier flags + quality/hygiene
    * gates + the PII policy, over the one persisted base frame. Factored
-   * out of [[runChain]] so the plan is dumpable (plans/r20) and the gates
-   * stage A/B-benchable without running the whole chain.
+   * out of [[runChain]] so the plan is dumpable and the gates stage
+   * A/B-benchable without running the whole chain. The pre-AQE plan at
+   * sf0.1 (plans/r20/q_pipeline_gates_harness.txt, from PlanDump) shows
+   * the scale shape below: three same-key sort-merge joins over ONE
+   * corpus exchange.
    *
    * One left flag-join per tier, deliberately KEPT after an r20 A/B
    * measured two "fused" rewrites slower (see OPTIMIZATION_r20.md): all
@@ -381,7 +395,7 @@ object BatchPipeline {
       staged: Option[(String, String)] = None,
       stageDir: Option[String] = None,
       piiPolicy: String = "drop"): Chain = {
-    import graft.pipeline.{Curation, Incremental, Pii, Text}
+    import graft.pipeline.{Curation, Incremental}
     require(piiPolicy == "drop" || piiPolicy == "redact",
       s"piiPolicy must be drop|redact, got '$piiPolicy'")
     val redact = piiPolicy == "redact"
@@ -426,23 +440,8 @@ object BatchPipeline {
          Incremental.stageMeta(spark, s"$d/base").getOrElse("quarantined", 0L))
       }
       case None => timed("ingest_extract") {
-        val (warcRows, warcBad) = graft.sources.Warc.read(spark, warcDir)
-        val jsonlSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("url",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("html",
-            org.apache.spark.sql.types.StringType)))
-        val (jsonlRows, jsonlBad) = graft.sources.Jsonl.read(spark, jsonlDir, jsonlSchema)
-        val raw = warcRows.select(col("url"), col("text").as("html"))
-          .unionAll(jsonlRows.select(col("url"), col("html")))
-        val b = raw.select(
-            xxhash64(col("url")).as("ingest_id"),
-            Text.urlCanonicalize(col("url")).as("url"),
-            Text.fixEncoding(
-              Text.extractHtml(col("html"), maxLinkDensity = 0.5)).as("text"))
-          .withColumn("tok", Text.tokenCount(col("text")))
-          .withColumn("domain", Text.registrableDomain(col("url")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val (lazyBase, warcBad, jsonlBad) = ingest(spark, warcDir, jsonlDir)
+        val b = lazyBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val q = warcBad.count() + jsonlBad.count() // forces b's sources too
         stageDir.foreach(d =>
           Incremental.commitStage(spark, s"$d/base", b,

@@ -1,20 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // test parquet is one ~60MB file; split it so scans + generates run
-      // with the parallelism a many-file production table would get
-      .config("spark.sql.files.maxPartitionBytes", 4 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // per-query median over `reps` INTERLEAVED suite passes: single runs on
     // a shared box swing 2-4x per query (measured r1->r2); running the whole
     // suite per rep (instead of reps back-to-back per query) decorrelates a
@@ -37,11 +26,9 @@ object Bench {
       // inflating later medians. Clearing between suite passes bounds the
       // leak while keeping every within-query cache benefit.
       if (rep > 1) spark.catalog.clearCache()
-      for (name <- names) {
-        val t0 = System.nanoTime()
-        val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-                 catch { case _: Throwable => failedQ += name; false }
-        if (ok) samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
+      Harness.eachQuery(spark, "bench", sfDir, names)((_, df) => df.count()) { o =>
+        if (o.result.isRight) samples(o.name) = samples(o.name) :+ o.sec
+        else failedQ += o.name
       }
     }
     val results = names.map { name =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Cache-residue probe over the WHOLE driver contract (VERDICT r15
  * next-round #8, institutionalizing the r15 manual step): run every
@@ -22,25 +20,16 @@ object CacheProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val outPath = if (args.length > 1) args(1) else "artifacts/cache_probe.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val names = SparkEntry.queries.keys.toSeq.sorted
     val dirty = scala.collection.mutable.ArrayBuffer.empty[String]
     val errored = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (name <- names) {
-      val failed =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); false }
-        catch { case _: Throwable => errored += name; true }
+    Harness.eachQuery(spark, "cacheprobe", sfDir, names)((_, df) => df.count()) { o =>
+      if (o.result.isLeft) errored += o.name
       if (!spark.sharedState.cacheManager.isEmpty) {
         // an errored query's residue is attributed to `errored` only —
         // disjoint buckets keep the clean count exact (ADVICE r16)
-        if (!failed) dirty += name
+        if (o.result.isRight) dirty += o.name
         spark.catalog.clearCache() // attribute residue to one query only
       }
     }

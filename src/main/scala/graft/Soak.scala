@@ -98,15 +98,7 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val mode = if (args.length > 1) args(1) else "audit"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", 16 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     mode match {
       case "derive" => derive(spark, sys.env.getOrElse(
         "SPARK_GRAFT_SOAK_SRC", "/root/testdata/sf0.1"), dir)
@@ -229,17 +221,14 @@ object Soak {
 
   def audit(spark: SparkSession, dir: String, only: Option[Set[String]]): Unit = {
     val sb = new StringBuilder
-    HeavyQueries.filter(q => only.forall(_(q))).foreach { name =>
-      val t0 = System.nanoTime()
-      val line = try {
-        val df = SparkEntry.queries(name)(spark, dir)
-        val rows = df.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val a = planAudit(df)
-        f"""{"q":"$name","sec":$sec%.2f,"rows":$rows,"cartesian":${a("cartesian")},"bnlj":${a("bnlj")},"smj":${a("smj")},"bhj":${a("bhj")},"shj":${a("shj")},"exchange":${a("exchange")}}"""
-      } catch { case e: Throwable =>
-        val sec = (System.nanoTime() - t0) / 1e9
-        f"""{"q":"$name","sec":$sec%.2f,"error":"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160).replace('"', '\'').replace('\n', ' ')}"}"""
+    Harness.eachQuery(spark, "soak", dir, HeavyQueries.filter(q => only.forall(_(q))))(
+        (_, df) => df.count()) { o =>
+      val line = o.result match {
+        case Right((df, rows)) =>
+          val a = planAudit(df)
+          f"""{"q":"${o.name}","sec":${o.sec}%.2f,"rows":$rows,"cartesian":${a("cartesian")},"bnlj":${a("bnlj")},"smj":${a("smj")},"bhj":${a("bhj")},"shj":${a("shj")},"exchange":${a("exchange")}}"""
+        case Left(e) =>
+          f"""{"q":"${o.name}","sec":${o.sec}%.2f,"error":"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160).replace('"', '\'').replace('\n', ' ')}"}"""
       }
       println(line)
       sb.append(line).append('\n')

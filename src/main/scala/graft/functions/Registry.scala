@@ -405,11 +405,14 @@ object Registry {
       }
     }
 
-  /** Register every function in an existing session's registry. */
+  /** Register every function in an existing session's registry; a name
+   * graft already registered (an earlier call, or GraftExtension) is left
+   * as it is, so a second call changes nothing. */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     functionDescriptions.foreach { case (id, info, fb) =>
-      reg.registerFunction(id, info, fb)
+      if (!reg.lookupFunction(id).exists(_.getClassName == info.getClassName))
+        reg.registerFunction(id, info, fb)
     }
   }
 }

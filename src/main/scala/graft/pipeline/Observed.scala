@@ -30,7 +30,9 @@ private[graft] object Observed {
   val millis: Long = 60000L
 
   /** The observed metric row as a name→value map, or None if the
-   * execution-end event hasn't arrived within [[millis]]. */
+   * execution-end event hasn't arrived within [[millis]]. An interrupt
+   * propagates as InterruptedException: a cancelled caller must not go
+   * on to launch the fallback job. */
   def metrics(obs: Observation): Option[Map[String, Any]] =
     try {
       Await.ready(obs.future, millis.milliseconds)
@@ -38,19 +40,21 @@ private[graft] object Observed {
         .map(row => row.schema.fieldNames.zip(row.toSeq).toMap)
     } catch {
       case _: java.util.concurrent.TimeoutException => None
-      case _: InterruptedException =>
-        Thread.currentThread().interrupt(); None
     }
 
   /** One long-valued metric with a bounded wait; `fallback` recomputes
    * the same statistic from the checkpointed frame ONLY if the event
    * never arrives. A metric that arrived as NULL (sum/max over an empty
-   * frame) reads as 0 — the same coercion the blocking reads used. */
+   * frame) reads as 0 — the same coercion the blocking reads used. A
+   * missing key or a non-Long value is a wiring bug, not a dropped
+   * event, so it fails loudly instead of reading as 0 or recounting. */
   def long(obs: Observation, key: String)(fallback: => Long): Long =
     metrics(obs) match {
       case Some(m) => m.get(key) match {
+        case Some(null) => 0L
         case Some(l: Long) => l
-        case _ => 0L
+        case other => throw new IllegalStateException(
+          s"observed metric '$key' is ${other.fold("missing")(v => s"a ${v.getClass.getName}")}, expected a Long")
       }
       case None => fallback
     }

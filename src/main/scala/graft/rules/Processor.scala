@@ -2,7 +2,6 @@ package graft.rules
 
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Expression, InterpretedProjection}
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Row, SparkSession}
 
@@ -21,10 +20,7 @@ object Processor {
   /** Compile a suite against a schema into a local Row => SuiteOutcome fn. */
   def create(spark: SparkSession, schema: StructType, suite: RuleSuite): Row => SuiteOutcome = {
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val cols = suite.rules.map { case (_, r) =>
-      org.apache.spark.sql.graft.Bridge.column(
-        graft.functions.RuleResultCoerce(Parsing.parse(r.sql, suite)))
-    }
+    val cols = RuleRunner.coerced(suite)
     // resolve once through the analyzer, then strip to bound expressions
     val analyzed = empty.select(cols: _*).queryExecution.analyzed
     val resolved: Seq[Expression] = analyzed.expressions.map {

@@ -1,9 +1,7 @@
 package graft.rules
 
-import graft.functions.{Registry, RuleResultCoerce}
 import graft.rules.RuleResults._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.{Column, DataFrame}
 
 /**
@@ -41,11 +39,6 @@ object RuleEngine {
    * declaration order. */
   private[rules] def bySalience(suite: RuleSuite): Seq[Indexed] =
     indexed(suite).filter(_.rule.output.isDefined).sortBy(_.rule.output.get.salience)
-
-  private def resultsArray(suite: RuleSuite): Column =
-    array(suite.rules.map { case (_, r) =>
-      Bridge.column(RuleResultCoerce(Parsing.parse(r.sql, suite)))
-    }: _*)
 
   def addRuleEngine(
       df: DataFrame, suite: RuleSuite, name: String = "ruleEngine",
@@ -85,7 +78,7 @@ object RuleEngine {
           }
           .getOrElse(lit(null))
 
-    df.withColumn(TmpCol, resultsArray(suite))
+    df.withColumn(TmpCol, array(RuleRunner.coerced(suite): _*))
       .withColumn(name, struct(
         RuleRunner.dqStructFrom(suite, tmp).as("ruleSuiteResults"),
         salient.as("salientRule"),

@@ -1,9 +1,7 @@
 package graft.rules
 
-import graft.functions.RuleResultCoerce
 import graft.rules.RuleResults._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.{Column, DataFrame}
 
 /**
@@ -60,11 +58,7 @@ object RuleFolder {
       } else
         steps.lastOption.map { case (_, acc) => when(anyTriggered, acc) }.getOrElse(lit(null))
 
-    val resultsArr = array(suite.rules.map { case (_, r) =>
-      Bridge.column(RuleResultCoerce(Parsing.parse(r.sql, suite)))
-    }: _*)
-
-    df.withColumn(TmpCol, resultsArr)
+    df.withColumn(TmpCol, array(RuleRunner.coerced(suite): _*))
       .withColumn(name, struct(
         RuleRunner.dqStructFrom(suite, tmp).as("ruleSuiteResults"),
         result.as("result")))

@@ -29,7 +29,9 @@ object RuleRunner {
   def parseRule(sql: String, suite: RuleSuite): Column =
     Parsing.parseCol(sql, suite)
 
-  private def coerced(suite: RuleSuite): Seq[Column] =
+  /** Every rule of `suite` as its coerced result column, in suite order —
+   * the one results array all runners project. */
+  private[rules] def coerced(suite: RuleSuite): Seq[Column] =
     suite.rules.map { case (_, r) =>
       Bridge.column(RuleResultCoerce(Parsing.parse(r.sql, suite)))
     }

@@ -43,27 +43,14 @@ object PlanDump {
         graft.pipeline.Lm.scoreMkn(m, scoreSet, col("doc_id"), col("t"))
       }),
       // the composed chain's GATES stage (the q_pipeline_* queries
-      // checkpoint it mid-chain, so the returned-frame plan hides it):
-      // ingest the staged front door and build the lazy pre-checkpoint
-      // gate frame exactly as runChain does — tier flags + langid/gopher/
-      // pii over the persisted base.
+      // checkpoint it mid-chain, so the returned-frame plan hides it): the
+      // lazy pre-checkpoint gate frame over the chain's own ingest — tier
+      // flags + langid/gopher/pii. Unpersisted here: runChain owns the
+      // persist, so this plan reads the front door where runChain's reads
+      // the cached base.
       "q_pipeline_gates" -> (() => {
         val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(s, sfDir)
-        val (warcRows, _) = graft.sources.Warc.read(s, warcDir)
-        val jsonlSchema = org.apache.spark.sql.types.StructType.fromDDL(
-          "url STRING, html STRING")
-        val (jsonlRows, _) = graft.sources.Jsonl.read(s, jsonlDir, jsonlSchema)
-        import graft.pipeline.Text
-        val raw = warcRows.select(col("url"), col("text").as("html"))
-          .unionAll(jsonlRows.select(col("url"), col("html")))
-        val base = raw.select(
-            xxhash64(col("url")).as("ingest_id"),
-            Text.urlCanonicalize(col("url")).as("url"),
-            Text.fixEncoding(
-              Text.extractHtml(col("html"), maxLinkDensity = 0.5)).as("text"))
-          .withColumn("tok", Text.tokenCount(col("text")))
-          .withColumn("domain", Text.registrableDomain(col("url")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val (base, _, _) = BatchPipeline.ingest(s, warcDir, jsonlDir)
         val (u, t, nr) = BatchPipeline.dedupTierIds(base)
         BatchPipeline.gateFlags(base, u, t, nr, redact = false)
       }))
@@ -73,34 +60,19 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", 4 * 1024 * 1024)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val cores = Harness.envCores
+    val spark = Harness.session(cores)
     new java.io.File(outDir).mkdirs()
-    implicit val sp: SparkSession = spark
-    val opMap = ops(sfDir)
-    for (name <- names) {
-      try {
-        val df = opMap.get(name).map(_.apply())
-          .getOrElse(SparkEntry.queries(name)(spark, sfDir))
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-          s"== $name ($suffix) sf=$sfDir cpus=$cpus ==\n" + txt)
-        println(s"[plandump] $name ok")
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-      }
-    }
+    val queries = SparkEntry.queries ++
+      ops(sfDir)(spark).map { case (k, op) => k -> ((_: SparkSession, _: String) => op()) }
+    Harness.eachQuery(spark, "plandump", sfDir, names, queries) { (name, df) =>
+      val txt = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+        s"== $name ($suffix) sf=$sfDir cpus=$cores ==\n" + txt)
+      println(s"[plandump] $name ok")
+    }(_ => ())
     spark.stop()
   }
 }

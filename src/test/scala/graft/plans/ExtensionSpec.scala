@@ -139,6 +139,17 @@ class ExtensionSpec extends AnyFunSuite {
     assert(out.getDouble(2) == -1.0)
   }
 
+  test("a second registerAll leaves the registry unchanged") {
+    graft.functions.Registry.registerAll(spark)
+    val reg = spark.sessionState.functionRegistry
+    def snapshot = reg.listFunction().map(id => id -> reg.lookupFunctionBuilder(id).get).toMap
+    val before = snapshot
+    graft.functions.Registry.registerAll(spark)
+    val after = snapshot
+    assert(after.keySet == before.keySet)
+    assert(before.forall { case (id, b) => after(id) eq b }, "registerAll replaced a function")
+  }
+
   test("registered aggregates work from plain spark.sql") {
     graft.functions.Registry.registerAll(spark)
     spark.range(1, 20).toDF("id").createOrReplaceTempView("graft_sql_agg")
