@@ -282,7 +282,7 @@ object SparkEntry {
       .select("r.*")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_dq_ordering" -> ((s, dir) =>
       // per-user event-time ordering health, with every 23rd event's ts
       // pushed an hour back to plant regressions
@@ -1861,9 +1861,10 @@ object SparkEntry {
       // the COMPOSED batch pipeline, hash-gated at COMPOSITION scope
       // (VERDICT r15 next-round #1): run the production chain — WARC/JSONL
       // quarantining front doors → extract/repair/canonicalize → three
-      // dedup tiers → token/langid/gopher/PII gates → decontamination —
-      // through the exact BatchPipeline.runChain the artifact main uses,
-      // and return the whole-chain token-weighted retention funnel. Every
+      // dedup tiers → token/langid/gopher/PII gates → decontamination →
+      // sample → shards — as the exact config twin BatchPipeline.run
+      // executes, and return the whole-chain token-weighted retention
+      // funnel (the written parquet, read back). Every
       // planted fixture (%37 URL variants, %41 mirrors, %43 near-copies,
       // %53 PII, %97 benchmark leaks) has a closed-form expected drop, so
       // the oracle replays the ENTIRE funnel in SQL: extraction closed
@@ -1872,26 +1873,21 @@ object SparkEntry {
       // count is require-pinned here (quarantined raw regions never reach
       // the funnel frame, so the funnel can't see them). Fixture staging
       // is cached per JVM — the reps re-run the pipeline, not the writer.
+      val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(s, dir)
       val work = java.nio.file.Files.createTempDirectory("graft_q_pipe").toString
-      val chain = BatchPipeline.runChain(s, dir, work,
-        staged = Some(BatchPipeline.stagedOnce(s, dir)))
-      require(chain.quarantined == 4,
-        s"expected exactly 4 quarantined raw regions, got ${chain.quarantined}")
-      val funnel = graft.pipeline.Curation.retentionFunnel(
-        chain.flagged, chain.gateCols, weight = col("tok"))
-      chain.base.unpersist(blocking = false)
-      funnel
+      val res = BatchPipeline.configTwin(dir, warcDir, jsonlDir).run(s, work)
+      require(res.quarantined == 4,
+        s"expected exactly 4 quarantined raw regions, got ${res.quarantined}")
+      res.funnel
     }),
     "q_pipeline_yaml" -> ((s, dir) => {
-      // the composed pipeline's CONFIG EXECUTION path, hash-gated per
-      // round: parse the YAML twin of the chain (BatchPipeline.configTwin
-      // — the exact spec BatchConfigSpec pins bit-identical to the
-      // hand-coded path) and run it through BatchConfig.run; the oracle is
-      // the SAME whole-funnel replay as q_pipeline_batch, so a regression
-      // in the config layer's execution (tier threading, flag joins, gate
-      // order, funnel weight) trips the per-round gate even when the
-      // hand-coded path stays green. Funnel-only face: sampling/shard legs
-      // are spec- and artifact-covered.
+      // the composed pipeline's YAML face, hash-gated per round: the
+      // chain's config twin (BatchPipeline.configTwin) rendered to YAML,
+      // parsed back and run through BatchConfig.run; the oracle is the
+      // SAME whole-funnel replay as q_pipeline_batch, so a field the YAML
+      // round trip loses or mangles trips the per-round gate.
+      // Funnel-only face: sampling/shard legs are covered by
+      // q_pipeline_batch and the specs.
       val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(s, dir)
       val spec = BatchPipeline.configTwin(dir, warcDir, jsonlDir)
         .copy(sample = None, shards = None)
@@ -1910,8 +1906,8 @@ object SparkEntry {
       // scrubbed-away token mass to the pii stage (raw weight through
       // pii, redacted weight after — conservation is part of the oracle).
       // Decontamination sees the scrubbed text, so the %53∩%97 docs still
-      // leak-gate on their bodies. The hand-coded runChain under the same
-      // policy is spec-pinned bit-identical (BatchPipelineSpec).
+      // leak-gate on their bodies. BatchPipeline.run under the same
+      // policy is spec-pinned to the same funnel (BatchPipelineSpec).
       val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(s, dir)
       val spec = BatchPipeline.configTwin(dir, warcDir, jsonlDir,
           piiPolicy = "redact")
@@ -3519,8 +3515,9 @@ object SparkEntry {
   // TRUE all-pairs 3-shingle Jaccard for the near tier with the
   // keep-most-complete loser rule, then the langid/gopher/pii/
   // decontamination gate replicas and first-fail accounting — shared by
-  // q_pipeline_batch (hand-coded runChain) and q_pipeline_yaml (the
-  // BatchConfig twin), which must produce the SAME funnel.
+  // q_pipeline_batch (the config twin BatchPipeline.run executes) and
+  // q_pipeline_yaml (the same twin after a YAML round trip), which must
+  // produce the SAME funnel.
   private val PipelineFunnelOracleSql: String =
     """WITH raw AS (
         |  SELECT doc_id, text,
@@ -3999,7 +3996,7 @@ object SparkEntry {
       |SELECT hits, truth_size, hits * 1000000 // NULLIF(truth_size, 0) AS recall_ppm
       |FROM ov, ts""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "q_cms_langs" ->
       "SELECT source, lang, count(*) AS n_docs FROM documents GROUP BY source, lang",
     "q_theta_overlap" ->

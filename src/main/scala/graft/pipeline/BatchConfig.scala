@@ -16,13 +16,17 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
  * the decontamination source, the sampling temperature and the shard
  * export — reviewable, diffable YAML, not code rebuilt per run.
  *
- * Execution replays the exact [[graft.BatchPipeline]] composition (the
- * parity is spec-pinned funnel-bit-for-bit): ONE persisted base frame,
- * dedup survivor tiers materialized as checkpointed id frames with each
- * tier threading off the previous tier's checkpoint, survivors joined
- * back as FLAGS keyed on the id (shuffles, never corpus broadcasts), one
- * first-fail retention funnel, then optional temperature sampling and
- * content-addressed shard export.
+ * [[BatchSpec.run]] is the ONE composition of the chain:
+ * [[graft.BatchPipeline.run]] stages its raw front door and executes its
+ * config twin ([[graft.BatchPipeline.configTwin]]) through it. Execution
+ * shape: ONE persisted base frame, dedup survivor tiers materialized as
+ * checkpointed id frames with each tier threading off the previous
+ * tier's checkpoint, survivors joined back as FLAGS keyed on the id
+ * (shuffles, never corpus broadcasts), one first-fail retention funnel
+ * written once, then optional temperature sampling (checkpointed once)
+ * and content-addressed shard export. Each stage's wall time is recorded
+ * under its name (ingest_extract, dedup, gates, funnel, sample,
+ * write_shards).
  *
  * {{{
  * version: 1
@@ -56,7 +60,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
  *   sources:
  *     - {name: wiki,  where: "domain = 'wikipedia.org'", weight: 2.5}
  *     - {name: crawl, weight: 0.375}
- * shards: {nShards: 32}             # written under workDir/shards
+ * shards: {nShards: 32}             # written under workDir/shards; wds:
+ *                                   #   {format: wds, text: text, verify: manifest}
  * }}}
  *
  * SQL in `expr` / `where` / `content` / `sizeBy` resolves with the
@@ -185,10 +190,12 @@ object BatchConfig {
    * ([[graft.sources.Wds.write]] — WebDataset tar shards, the format GPU
    * loaders stream; needs `text`, the column name exported as each
    * sample's `.txt` part). Both use the same content-addressed shard
-   * assignment and within-shard pseudo-shuffle. */
+   * assignment and within-shard pseudo-shuffle. `verify` is the wds
+   * export's post-write check: `full` reads the whole artifact back,
+   * `manifest` trusts the commit-site tallies (see Wds.write). */
   final case class ShardSpec(nShards: Int, format: String = "parquet",
       text: Option[String] = None, meta: Seq[String] = Nil,
-      epoch: Int = 0, compress: Boolean = false) {
+      epoch: Int = 0, compress: Boolean = false, verify: String = "full") {
     require(nShards > 0, "nShards must be positive")
     require(format == "parquet" || format == "wds",
       s"shards format must be parquet|wds, got '$format'")
@@ -199,6 +206,10 @@ object BatchConfig {
     require(epoch >= 0, "shards epoch must be non-negative")
     require(!compress || format == "wds",
       "shards `compress` is a wds feature (gzipped tar shards)")
+    require(verify == "full" || verify == "manifest",
+      s"shards verify must be full|manifest, got '$verify'")
+    require(verify == "full" || format == "wds",
+      "shards `verify: manifest` is a wds feature")
   }
 
   final case class BatchSpec(version: Int, name: String,
@@ -427,6 +438,7 @@ object BatchConfig {
         if (sh.meta.nonEmpty) m.put("meta", jlist(sh.meta))
         if (sh.epoch != 0) m.put("epoch", sh.epoch)
         if (sh.compress) m.put("compress", true)
+        if (sh.verify != "full") m.put("verify", sh.verify)
         root.put("shards", m)
       }
       val opts = new org.yaml.snakeyaml.DumperOptions()
@@ -455,61 +467,13 @@ object BatchConfig {
     private def gateColumns: Seq[(String, Column)] =
       flagColumnNames.map { case (n, c) => n -> col(c) }
 
-    /** Run the configured chain; artifacts (funnel parquet + markdown,
-     * shard manifest, one-line JSON summary) land under `work`. With
-     * `stageDir` set, the ingested base and the flagged frame commit
-     * under it ([[Incremental.commitStage]]'s manifest-guarded protocol,
-     * the hand-coded chain's restartability contract) and a re-run
-     * resumes from the last committed stage — stamped with
-     * [[fingerprint]], so resuming under an edited config fails loudly.
-     * Use one stageDir per (sources, config) run. */
-    def run(spark: SparkSession, work: String,
-        stageDir: Option[String] = None): BatchResult = {
-      graft.functions.Registry.registerAll(spark)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
-      def checkFp(meta: Map[String, Long], d: String): Unit = {
-        // the stamp must be PRESENT: an unstamped stage is a foreign one
-        // (e.g. the hand-coded chain's stageDir) — defaulting it to the
-        // current fingerprint would wave any committed frame through
-        require(meta.contains("config_fp"),
-          s"stageDir '$d' holds stages without a config fingerprint " +
-            "(not committed by BatchConfig.run) — use a fresh stageDir")
-        require(meta("config_fp") == fingerprint,
-          s"stageDir '$d' was committed under a DIFFERENT config " +
-            "(fingerprint mismatch) — use one stageDir per config")
-      }
-
-      // ---- resume from the flagged stage if a committed copy exists
-      stageDir.filter(d => Incremental.committedStage(spark, s"$d/flagged"))
-        .foreach { d =>
-          val meta = Incremental.stageMeta(spark, s"$d/flagged")
-          checkFp(meta, d)
-          val materialized = spark.read.parquet(s"$d/flagged")
-          // ingested rides the stage metadata — a 100 TB resume must not
-          // pay a count job for a number known at commit time (flags
-          // never drop rows, so the fallback count equals it)
-          return finishRun(spark, work, materialized, gateColumns,
-            meta.getOrElse("ingested", materialized.count()),
-            meta.getOrElse("quarantined", 0L))
-        }
-      val resumeBase = stageDir
-        .filter(d => Incremental.committedStage(spark, s"$d/base"))
-
-      // ---- resume base, or ingest (and optionally commit it).
-      // Quarantine accounting is DEFERRED until the persisted base is
-      // forced and, when a quarantineDir is set, counted from the WRITTEN
-      // output — one raw parse per source pays for the quarantine
-      // artifact and its count, and the base materialization is the only
-      // other pass (the runChain single-parse discipline; ADVICE r16).
-      val (base, ingested, quarantined) = resumeBase match {
-       case Some(d) =>
-        val meta = Incremental.stageMeta(spark, s"$d/base")
-        checkFp(meta, d)
-        val b = spark.read.parquet(s"$d/base")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (b, b.count(), meta.getOrElse("quarantined", 0L))
-       case None =>
-        val doors = sources.map { s =>
+    /** The unpersisted base frame (front doors unioned, the id on RAW
+     * columns, the ordered enrichments, the slim select) and one
+     * quarantine counter per source. A counter with a `quarantineDir`
+     * writes the quarantine first and counts the WRITTEN output, so one
+     * raw parse per source pays for the artifact and its count. */
+    private[graft] def ingest(spark: SparkSession): (DataFrame, Seq[() => Long]) = {
+      val doors = sources.map { s =>
         val (rows, bad) = s.format match {
           case "warc" => graft.sources.Warc.read(spark, s.path)
           case "jsonl" => graft.sources.Jsonl.read(spark, s.path,
@@ -531,27 +495,26 @@ object BatchConfig {
         (mapped, countBad)
       }
       val raw = doors.map(_._1).reduce(_ unionByName _)
-
-      // ---- id on RAW columns, then ordered enrichments, then the slim
-      // persisted base every downstream stage reads
       val withId = raw.select(expr(idExpr).as(idName) +: raw.columns.map(col): _*)
       val prepared = prepare.foldLeft(withId) { case (d, (c, e)) =>
         d.withColumn(c, expr(e))
       }
-        val b = (if (select.isEmpty) prepared
-                 else prepared.select((idName +: select).distinct.map(col): _*))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = b.count() // force the base before the bad-side passes
-        val q = doors.map(_._2()).sum
-        stageDir.foreach(d => Incremental.commitStage(spark, s"$d/base", b,
-          Map("quarantined" -> q, "config_fp" -> fingerprint)))
-        (b, n, q)
-      }
+      (if (select.isEmpty) prepared
+       else prepared.select((idName +: select).distinct.map(col): _*),
+       doors.map(_._2))
+    }
 
-      // ---- dedup tiers: checkpointed survivor ids, each tier threading
-      // off the previous tier's checkpoint (one execution per tier)
+    /** Survivor ids per dedup tier, each tier's work executed exactly
+     * ONCE: tier k+1 is built from `base` semi-joined against tier k's
+     * already-CHECKPOINTED ids, never from tier k's lazy plan (which
+     * would re-run every upstream tier's aggregate). The checkpoints are
+     * ContextCleaner-managed — no pinned cache. `checkpoint` is a test
+     * seam: BatchPipelineSpec passes a capturing hook to pin the
+     * one-aggregate-per-tier plan shape. */
+    private[graft] def tierIds(base: DataFrame,
+        checkpoint: DataFrame => DataFrame = Checkpoints.stage): Seq[DataFrame] = {
       var cur = base
-      val tierIds: Seq[(String, DataFrame)] = dedup.map { t =>
+      dedup.map { t =>
         val survivors = t match {
           case e: ExactTier => e.trust match {
             case Some(tr) => Dedup.exactPreferring(
@@ -573,22 +536,29 @@ object BatchConfig {
           case c: CapTier =>
             Curation.capPerKey(cur, expr(c.key), col(idName), c.max)
         }
-        val ids = Checkpoints.stage(survivors.select(col(idName)))
+        val ids = checkpoint(survivors.select(col(idName)))
         cur = base.join(ids, Seq(idName), "leftsemi")
-        t.name -> ids
+        ids
       }
+    }
 
-      // ---- flags on the one base frame: tiers, gates, decontamination
-      // (column names come from flagColumnNames — the same table the
-      // resumed-frame funnel reads, so they cannot drift)
+    /**
+     * The LAZY pre-checkpoint flags frame over the base: one survivor
+     * flag per dedup tier, the row-local gates, and the pii stage (column
+     * names from [[flagColumnNames]], the table the resumed-frame funnel
+     * reads too, so they cannot drift).
+     *
+     * One left flag-join per tier, all keyed on the id, so the same-key
+     * sort-merge joins share ONE corpus exchange + sort: the text payload
+     * crosses the network once, not once per tier. The pre-AQE plan at
+     * sf0.1 shows that shape — three sort-merge joins over one exchange
+     * of the corpus (plans/chain/q_pipeline_gates_config.txt, written by
+     * PlanDump).
+     */
+    private[graft] def flags(base: DataFrame, tierIds: Seq[DataFrame]): DataFrame = {
       val colNames = flagColumnNames.map(_._2)
-      // one left flag-join per tier — deliberately kept after an r20 A/B
-      // measured the pre-combined variants slower (see
-      // BatchPipeline.gateFlags' scaladoc and OPTIMIZATION_r20.md): the
-      // same-key joins broadcast locally and share one corpus exchange in
-      // the sort-merge regime, so the payload never crosses per-tier.
       var flagged = base
-      tierIds.zipWithIndex.foreach { case ((_, ids), i) =>
+      tierIds.zipWithIndex.foreach { case (ids, i) =>
         val c = colNames(i)
         flagged = flagged
           .join(ids.withColumn(c, lit(true)), Seq(idName), "left")
@@ -608,7 +578,7 @@ object BatchConfig {
         p.policy match {
           case "drop" =>
             // match-only detection — provably redactPii(text) === text
-            // without the four per-doc copies (r20 opt, Pii.hasPii)
+            // without the four per-doc copies (Pii.hasPii)
             flagged = flagged.withColumn(c, !Pii.hasPii(col(p.text)))
           case "redact" =>
             flagged = flagged
@@ -619,103 +589,178 @@ object BatchConfig {
             }.withColumn(c, lit(true))
         }
       }
-      // checkpoint BEFORE decontamination: flags (and the redact scrub)
-      // run exactly once, and decon reads the post-pii text from the
-      // materialized frame — no second scrub pass over the corpus
-      val staged = Checkpoints.stage(flagged)
-      val materialized = decontaminate match {
-        case Some(d) =>
-          val bench0 = spark.read.parquet(d.path)
-          val bench = d.where.map(w => bench0.where(expr(w))).getOrElse(bench0)
-            .select(expr(d.benchTextExpr).as("graft_bench_text"))
-          val leaking = Curation.decontaminate(staged, col(idName),
-              expr(d.textExpr), bench, col("graft_bench_text"),
-              n = d.n, minShared = d.minShared)
-            .select(col("id").as(idName)).withColumn("graft_leak", lit(true))
-            .localCheckpoint() // small (leak ids only) — decon runs once
-          staged.join(leaking, Seq(idName), "left")
-            .withColumn(colNames.last, col("graft_leak").isNull)
-        case None => staged
+      flagged
+    }
+
+    /** Run the configured chain; artifacts (funnel parquet, shards) land
+     * under `work`, and per-stage wall seconds in [[BatchResult.stages]].
+     * With `stageDir` set, the ingested base and the flagged frame commit
+     * under it ([[Incremental.commitStage]]'s manifest-guarded protocol)
+     * and a re-run resumes from the last committed stage — stamped with
+     * [[fingerprint]], so resuming under an edited config fails loudly.
+     * Use one stageDir per (sources, config) run. */
+    def run(spark: SparkSession, work: String,
+        stageDir: Option[String] = None): BatchResult = {
+      graft.functions.Registry.registerAll(spark)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
+      val timed = new StageWalls
+      def checkFp(meta: Map[String, Long], d: String): Unit = {
+        // the stamp must be PRESENT: an unstamped stage is a foreign one
+        // — defaulting it to the current fingerprint would wave any
+        // committed frame through
+        require(meta.contains("config_fp"),
+          s"stageDir '$d' holds stages without a config fingerprint " +
+            "(not committed by BatchConfig.run) — use a fresh stageDir")
+        require(meta("config_fp") == fingerprint,
+          s"stageDir '$d' was committed under a DIFFERENT config " +
+            "(fingerprint mismatch) — use one stageDir per config")
       }
-      val gateCols = gateColumns
+
+      // ---- resume from the flagged stage if a committed copy exists
+      stageDir.filter(d => Incremental.committedStage(spark, s"$d/flagged"))
+        .foreach { d =>
+          val meta = Incremental.stageMeta(spark, s"$d/flagged")
+          checkFp(meta, d)
+          val materialized = spark.read.parquet(s"$d/flagged")
+          // ingested rides the stage metadata — a 100 TB resume must not
+          // pay a count job for a number known at commit time (flags
+          // never drop rows, so the fallback count equals it)
+          return finishRun(spark, work, timed, materialized,
+            meta.getOrElse("ingested", materialized.count()),
+            meta.getOrElse("quarantined", 0L))
+        }
+
+      // ---- resume the base, or ingest into ONE persisted base frame
+      // (and optionally commit it). Quarantine accounting runs after the
+      // base is forced: one raw parse per source for the base, one for
+      // its quarantine.
+      val (base, ingested, quarantined) = timed("ingest_extract") {
+        stageDir.filter(d => Incremental.committedStage(spark, s"$d/base")) match {
+          case Some(d) =>
+            val meta = Incremental.stageMeta(spark, s"$d/base")
+            checkFp(meta, d)
+            val b = spark.read.parquet(s"$d/base")
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            (b, b.count(), meta.getOrElse("quarantined", 0L))
+          case None =>
+            val (lazyBase, countBad) = ingest(spark)
+            val b = lazyBase
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            val n = b.count()
+            val q = countBad.map(_()).sum
+            stageDir.foreach(d => Incremental.commitStage(spark, s"$d/base", b,
+              Map("quarantined" -> q, "config_fp" -> fingerprint)))
+            (b, n, q)
+        }
+      }
+
+      val ids = timed("dedup") {
+        tierIds(base)
+      }
+
+      val materialized = timed("gates") {
+        // checkpoint BEFORE decontamination: flags (and the redact scrub)
+        // run exactly once, and decon reads the post-pii text from the
+        // materialized frame — no second scrub pass over the corpus
+        val staged = Checkpoints.stage(flags(base, ids))
+        decontaminate match {
+          case Some(d) =>
+            val bench0 = spark.read.parquet(d.path)
+            val bench = d.where.map(w => bench0.where(expr(w))).getOrElse(bench0)
+              .select(expr(d.benchTextExpr).as("graft_bench_text"))
+            val leaking = Curation.decontaminate(staged, col(idName),
+                expr(d.textExpr), bench, col("graft_bench_text"),
+                n = d.n, minShared = d.minShared)
+              .select(col("id").as(idName)).withColumn("graft_leak", lit(true))
+              .localCheckpoint() // small (leak ids only) — decon runs once
+            staged.join(leaking, Seq(idName), "left")
+              .withColumn(flagColumnNames.last._2, col("graft_leak").isNull)
+          case None => staged
+        }
+      }
       stageDir.foreach(d => Incremental.commitStage(spark, s"$d/flagged",
         materialized, Map("quarantined" -> quarantined,
           "ingested" -> ingested, "config_fp" -> fingerprint)))
       base.unpersist(blocking = false) // materialized is checkpoint-backed
-      finishRun(spark, work, materialized, gateCols, ingested, quarantined)
+      finishRun(spark, work, timed, materialized, ingested, quarantined)
     }
 
-    /** The funnel → sample → shard tail of [[run]], shared by the fresh
-     * path and the flagged-stage resume. */
-    private def finishRun(spark: SparkSession, work: String,
-        materialized: DataFrame, gateCols: Seq[(String, Column)],
-        ingested: Long, quarantined: Long): BatchResult = {
-      // ---- the whole-chain first-fail funnel (staged weights when the
-      // pii stage redacts: raw weight through the pii stage, re-derived
-      // weight after — token mass lost to scrubbing charges to pii)
+    /** The funnel → sample → mix → shard tail of [[run]], shared by the
+     * fresh path and the flagged-stage resume. */
+    private def finishRun(spark: SparkSession, work: String, timed: StageWalls,
+        materialized: DataFrame, ingested: Long, quarantined: Long): BatchResult = {
+      val gateCols = gateColumns
+      // ---- the whole-chain first-fail funnel, written ONCE (staged
+      // weights when the pii stage redacts: raw weight through the pii
+      // stage, re-derived weight after — token mass lost to scrubbing
+      // charges to pii). The result's funnel is this parquet read back
+      // with the schema it was written with (inferring it costs a job).
       val w = weight.map(expr).getOrElse(lit(1L))
-      val funnel0 = pii.filter(_.policy == "redact") match {
-        case Some(p) =>
-          val piiIdx = gateCols.indexWhere(_._1 == p.name)
-          val weights = gateCols.indices.map(i =>
-            if (i <= piiIdx) col("graft_w_raw") else w) :+ w
-          Curation.retentionFunnelStaged(materialized, gateCols, weights)
-        case None =>
-          Curation.retentionFunnel(materialized, gateCols, weight = w)
+      val funnelPath = s"$work/funnel.parquet"
+      val funnelSchema = timed("funnel") {
+        val funnel = pii.filter(_.policy == "redact") match {
+          case Some(p) =>
+            val piiIdx = gateCols.indexWhere(_._1 == p.name)
+            val weights = gateCols.indices.map(i =>
+              if (i <= piiIdx) col("graft_w_raw") else w) :+ w
+            Curation.retentionFunnelStaged(materialized, gateCols, weights)
+          case None =>
+            Curation.retentionFunnel(materialized, gateCols, weight = w)
+        }
+        funnel.write.mode("overwrite").parquet(funnelPath)
+        funnel.schema
       }
 
       // ---- survivors → optional temperature sample → optional shards.
       // Slim back to the declared base columns: the graft_flag_/graft_gate_/
       // graft_leak/graft_decon working columns are funnel plumbing, not
       // training data — persisting them into the shard export would bloat
-      // a 100 TB artifact and diverge from the hand-coded export schema
-      // (ADVICE r16).
+      // a 100 TB artifact (ADVICE r16).
       val survivors = materialized.where(gateCols.map(_._2).reduce(_ && _))
         .select(materialized.columns.filterNot(_.startsWith("graft_"))
           .map(col).toIndexedSeq: _*)
-      val sampled = sample match {
-        case Some(sm) =>
+      val (sampled, survivorTokens) = sample match {
+        case Some(sm) => timed("sample") {
           val tot = survivors
             .agg(coalesce(sum(expr(sm.tokens)), lit(0L)).cast("long"))
             .head().getLong(0)
-          Curation.temperatureSample(survivors, col(idName), expr(sm.domain),
+          // checkpointed once: the export, its count and a datacard read
+          // one materialized sample instead of each re-running it
+          (Curation.temperatureSample(survivors, col(idName), expr(sm.domain),
             expr(sm.tokens), totalBudget = math.max(1L,
               (tot * sm.budgetFraction).toLong), alpha = sm.alpha)
-        case None => survivors
+            .localCheckpoint(), Some(tot))
+        }
+        case None => (survivors, None)
       }
 
       // ---- optional pretraining mixture, funnel-accounted: the mix
-      // stage's row charges oversampled copies as GAINED mass (negative
-      // rows_dropped / weight_dropped, so out = in − dropped conserves).
-      // Cost: two narrow single-row aggregates over the mix input/output
-      // — the export pays the only corpus-shaped pass. When a
-      // temperature sample sits between the funnel tail and the mix, the
-      // sample's drop shows as the gap between the funnel's last
-      // rows_out and the mix row's rows_in (the funnel proper accounts
-      // the gate stages, as always).
+      // stage's row (appended to the funnel parquet) charges oversampled
+      // copies as GAINED mass (negative rows_dropped / weight_dropped, so
+      // out = in − dropped conserves). Cost: two narrow single-row
+      // aggregates over the mix input/output — the export pays the only
+      // corpus-shaped pass. When a temperature sample sits between the
+      // funnel tail and the mix, the sample's drop shows as the gap
+      // between the funnel's last rows_out and the mix row's rows_in.
       val mixed = mix.map { mx =>
-        Curation.mixCorpora(mx.sources.map(ms => (ms.name,
+        val mdf = Curation.mixCorpora(mx.sources.map(ms => (ms.name,
           ms.where.map(wx => sampled.where(expr(wx))).getOrElse(sampled),
           ms.weight)), col(idName))
+        import spark.implicits._
+        def tally(d: DataFrame) = {
+          val r = d.agg(count(lit(1)).as("n"),
+            coalesce(sum(w.cast("long")), lit(0L)).as("w")).head()
+          (r.getLong(0), r.getLong(1))
+        }
+        val (nIn, wIn) = tally(sampled)
+        val (nOut, wOut) = tally(mdf)
+        Seq((gateCols.size + 1, mx.name,
+          nIn, nIn - nOut, nOut, wIn, wIn - wOut, wOut)).toDF(
+          "stage", "gate", "rows_in", "rows_dropped", "rows_out",
+          "weight_in", "weight_dropped", "weight_out")
+          .write.mode("append").parquet(funnelPath)
+        mdf
       }
-      val funnel = (mix, mixed) match {
-        case (Some(mx), Some(mdf)) =>
-          val spark2 = materialized.sparkSession
-          import spark2.implicits._
-          def tally(d: DataFrame) = {
-            val r = d.agg(count(lit(1)).as("n"),
-              coalesce(sum(w.cast("long")), lit(0L)).as("w")).head()
-            (r.getLong(0), r.getLong(1))
-          }
-          val (nIn, wIn) = tally(sampled)
-          val (nOut, wOut) = tally(mdf)
-          funnel0.unionByName(Seq((gateCols.size + 1, mx.name,
-            nIn, nIn - nOut, nOut, wIn, wIn - wOut, wOut)).toDF(
-            "stage", "gate", "rows_in", "rows_dropped", "rows_out",
-            "weight_in", "weight_dropped", "weight_out"))
-        case _ => funnel0
-      }
-      funnel.write.mode("overwrite").parquet(s"$work/funnel.parquet")
 
       // a mixed export keys on the collision-resistant mix_id: full
       // copies duplicate the original id, which can no longer key a
@@ -723,23 +768,44 @@ object BatchConfig {
       val exportDf = mixed.getOrElse(sampled)
       val exportId = if (mixed.isDefined) col("mix_id") else col(idName)
       val manifest = shards.map { sh =>
-        (sh.format match {
-          case "wds" => graft.sources.Wds.write(exportDf, exportId,
-            col(sh.text.get), weight.map(expr).getOrElse(lit(1L)),
-            s"$work/shards", nShards = sh.nShards,
-            metaCols = sh.meta.map(m => m -> col(m)),
-            epoch = sh.epoch, compress = sh.compress)
-          case _ => Curation.writeShards(exportDf,
-            exportId, weight.map(expr).getOrElse(lit(1L)),
-            s"$work/shards", nShards = sh.nShards, epoch = sh.epoch)
-        }).localCheckpoint()
+        timed("write_shards") {
+          (sh.format match {
+            case "wds" => graft.sources.Wds.write(exportDf, exportId,
+              col(sh.text.get), w, s"$work/shards", nShards = sh.nShards,
+              metaCols = sh.meta.map(m => m -> col(m)),
+              epoch = sh.epoch, compress = sh.compress, verify = sh.verify)
+            case _ => Curation.writeShards(exportDf, exportId, w,
+              s"$work/shards", nShards = sh.nShards, epoch = sh.epoch)
+          }).localCheckpoint()
+        }
       }
-      BatchResult(funnel, ingested, quarantined, manifest)
+      BatchResult(spark.read.schema(funnelSchema).parquet(funnelPath),
+        ingested, quarantined, manifest, materialized, sampled,
+        survivorTokens, timed.walls.toSeq)
     }
   }
 
+  /** What [[BatchSpec.run]] produced: the funnel (the written parquet,
+   * read back), the ingest totals, the shard manifest, the flagged frame,
+   * the sampled frame (the survivors when no sample is configured) and
+   * the survivor token total the sample budget came from, plus the wall
+   * seconds of each stage in run order. */
   final case class BatchResult(funnel: DataFrame, ingested: Long,
-      quarantined: Long, shardManifest: Option[DataFrame])
+      quarantined: Long, shardManifest: Option[DataFrame],
+      flagged: DataFrame, sampled: DataFrame, survivorTokens: Option[Long],
+      stages: Seq[(String, Double)])
+
+  /** Wall seconds per named stage, in the order the stages ran. */
+  private[graft] final class StageWalls {
+    val walls = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    def apply[T](stage: String)(body: => T): T = {
+      val t0 = System.nanoTime()
+      val r = body
+      walls(stage) = (System.nanoTime() - t0) / 1e9
+      r
+    }
+  }
+
 
   // ---- yaml (snakeyaml untyped maps; same helpers posture as
   // PipelineConfig — fail with the step location in the message) ----
@@ -819,7 +885,8 @@ object BatchConfig {
       ShardSpec(int(m, "nShards", "shards"), strOr(m, "format", "parquet"),
         Option(m.get("text")).map(_.toString), optStrList(m, "meta"),
         intOr(m, "epoch", 0),
-        Option(m.get("compress")).exists(_.toString.toBoolean))
+        Option(m.get("compress")).exists(_.toString.toBoolean),
+        strOr(m, "verify", "full"))
     }
     val mixSpec = Option(root.get("mix")).map { v =>
       val m = asMap(v, "mix")

@@ -16,8 +16,9 @@ import org.apache.spark.sql.DataFrame
  *  1. **stageDir** ([[Incremental.commitStage]]): manifest-guarded
  *     parquet commits at the stage boundaries — survives full driver
  *     loss, resumable, and the recommended production posture
- *     (BatchPipeline.runChain's `stageDir` parameter; docs/pipeline/
- *     batch.md "Durability at cluster scale").
+ *     (the `stageDir` parameter of BatchConfig.BatchSpec.run and of
+ *     BatchPipeline.run; docs/pipeline/batch.md "Durability at cluster
+ *     scale").
  *  2. **Reliable checkpoints** (this knob): set
  *     `spark.graft.reliableCheckpoints=true` AND a Spark checkpoint dir
  *     (`sc.setCheckpointDir` — HDFS/S3 on a cluster), and every

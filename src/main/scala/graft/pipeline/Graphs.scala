@@ -180,16 +180,13 @@ object Graphs {
       }
     }
 
-    val nodeStats = Observed.metrics(nodeObs).getOrElse {
-      val r = nodesP.agg(count(lit(1)).as("graft_n"),
-        sum(when(col("graft_seed"), 1L).otherwise(0L)).as("graft_nseeds")).head()
-      Map("graft_n" -> r.getLong(0), "graft_nseeds" -> r.getLong(1))
+    val Seq(n, seedCount) = Observed.longs(nodeObs, "graft_n", "graft_nseeds") {
+      val r = nodesP.agg(count(lit(1)),
+        coalesce(sum(when(col("graft_seed"), 1L).otherwise(0L)), lit(0L))).head()
+      Seq(r.getLong(0), r.getLong(1))
     }
-    val n = nodeStats.get("graft_n").collect { case l: Long => l }.getOrElse(0L)
     require(n > 0, "rank needs at least one node")
-    val nSeeds =
-      if (seeds == null) n
-      else nodeStats.get("graft_nseeds").collect { case l: Long => l }.getOrElse(0L)
+    val nSeeds = if (seeds == null) n else seedCount
     require(nSeeds > 0, "trustRankFixed: no seed is present in the node universe")
     val initRank = scale / nSeeds
     // the teleport term — constant across iterations, paid to seeds only
@@ -534,14 +531,13 @@ object Graphs {
           sum(when(col("core_degree") < k, 1L).otherwise(0L)).as("graft_below"),
           count(lit(1)).as("graft_nodes"))
         .localCheckpoint(true)
-      val m = Observed.metrics(obs).getOrElse {
+      val Seq(below, nodes) = Observed.longs(obs, "graft_below", "graft_nodes") {
         val r = d.agg(
           coalesce(sum(when(col("core_degree") < k, 1L).otherwise(0L)), lit(0L)),
           count(lit(1))).head()
-        Map("graft_below" -> r.getLong(0), "graft_nodes" -> r.getLong(1))
+        Seq(r.getLong(0), r.getLong(1))
       }
-      (d, m.get("graft_below").collect { case l: Long => l }.getOrElse(0L),
-        m.get("graft_nodes").collect { case l: Long => l }.getOrElse(0L))
+      (d, below, nodes)
     }
     var (deg, below, nodes) = degObserved(
       und.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree")))

@@ -173,7 +173,8 @@ object Incremental {
 
   /**
    * Manifest-guarded FRESH stage commit for restartable chains (the
-   * BatchPipeline resume contract): at 100 TB a crash in hour 30 of a
+   * resume contract of BatchConfig.BatchSpec.run, which BatchPipeline.run
+   * executes): at 100 TB a crash in hour 30 of a
    * 40-hour chain must not restart from raw WARC, so optional stage
    * outputs are committed with the same torn-write discipline as
    * [[compact]]'s swap — write to `dir__stage_tmp`, stamp small metadata

@@ -42,20 +42,25 @@ private[graft] object Observed {
       case _: java.util.concurrent.TimeoutException => None
     }
 
-  /** One long-valued metric with a bounded wait; `fallback` recomputes
-   * the same statistic from the checkpointed frame ONLY if the event
-   * never arrives. A metric that arrived as NULL (sum/max over an empty
-   * frame) reads as 0 — the same coercion the blocking reads used. A
-   * missing key or a non-Long value is a wiring bug, not a dropped
-   * event, so it fails loudly instead of reading as 0 or recounting. */
-  def long(obs: Observation, key: String)(fallback: => Long): Long =
+  /** Long-valued metrics, in `keys` order, with a bounded wait;
+   * `fallback` recomputes the same statistics (same order) from the
+   * checkpointed frame ONLY if the event never arrives. A metric that
+   * arrived as NULL (sum/max over an empty frame) reads as 0 — the same
+   * coercion the blocking reads used. A missing key or a non-Long value
+   * is a wiring bug, not a dropped event, so it fails loudly instead of
+   * reading as 0 or recounting. */
+  def longs(obs: Observation, keys: String*)(fallback: => Seq[Long]): Seq[Long] =
     metrics(obs) match {
-      case Some(m) => m.get(key) match {
+      case Some(m) => keys.map(key => m.get(key) match {
         case Some(null) => 0L
         case Some(l: Long) => l
         case other => throw new IllegalStateException(
           s"observed metric '$key' is ${other.fold("missing")(v => s"a ${v.getClass.getName}")}, expected a Long")
-      }
+      })
       case None => fallback
     }
+
+  /** One long-valued metric, read under [[longs]]' rules. */
+  def long(obs: Observation, key: String)(fallback: => Long): Long =
+    longs(obs, key)(Seq(fallback)).head
 }

@@ -38,22 +38,12 @@ object RuleRunner {
 
   /** Fold rule-result ints into an overall result
    * (reference: impl/OverallResult.scala:21-30): Failed dominates,
-   * Soft/Disabled neutral, probability below threshold fails. */
-  def overall(results: Column, probablePass: Double): Column = {
-    val threshold = probablePass * PassedInt
-    aggregate(results, lit(PassedInt), (acc, r) =>
-      when(acc === FailedInt, FailedInt)
-        .when(r === PassedInt || r === SoftFailedInt || r === DisabledRuleInt, acc)
-        .when(r === FailedInt, FailedInt)
-        .when(r.cast("double") < threshold, FailedInt)
-        .otherwise(acc))
-  }
-
-  /** Same fold unrolled over a statically known element list: the fold only
-   * ever lands on Passed or Failed, so it reduces to "any element fails ⇒
-   * Failed". Plain comparisons + OR stay inside whole-stage codegen; the
-   * HOF `aggregate` above evaluates its lambda interpreted, which dominated
-   * the flatten hot path (8 interpreted array folds per row). */
+   * Soft/Disabled neutral, probability below threshold fails. Unrolled over
+   * a statically known element list: the fold only ever lands on Passed or
+   * Failed, so it reduces to "any element fails ⇒ Failed". Plain
+   * comparisons + OR stay inside whole-stage codegen, where a HOF
+   * `aggregate` fold evaluates its lambda interpreted (it dominated the
+   * flatten hot path: 8 interpreted array folds per row). */
   private def overallStatic(results: Seq[Column], probablePass: Double): Column =
     if (results.isEmpty) lit(PassedInt) // empty suite/set: vacuously passed
     else {

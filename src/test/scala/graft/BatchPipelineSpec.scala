@@ -12,14 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class BatchPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  private val src = "/root/testdata/sf0.001"
   private lazy val work = java.nio.file.Files
     .createTempDirectory("graft_pipe_spec").toString
-  private lazy val summary =
-    BatchPipeline.run(spark, "/root/testdata/sf0.001", work)
-  private def jsonLong(key: String): Long =
-    s""""$key":(-?\\d+)""".r.findFirstMatchIn(summary)
+  private lazy val summary = BatchPipeline.run(spark, src, work)
+  private def jsonLong(key: String, in: => String = summary): Long =
+    s""""$key":(-?\\d+)""".r.findFirstMatchIn(in)
       .map(_.group(1).toLong)
-      .getOrElse(fail(s"$key missing in $summary"))
+      .getOrElse(fail(s"$key missing in $in"))
 
   test("runs end to end: quarantines exact, shards consistent, no cartesians") {
     // 3 corrupt JSONL lines + 1 malformed WARC region, nothing else
@@ -55,9 +55,10 @@ class BatchPipelineSpec extends AnyFunSuite {
   test("dedup tiers thread off checkpointed survivors: one aggregate per exact tier") {
     // VERDICT r15 what's-wrong #1: materializing the text/near tiers must
     // not re-execute upstream tiers through lazy lineage. Pin the plan
-    // shape via the checkpoint seam: each exact tier's pre-checkpoint plan
-    // carries exactly ITS OWN fingerprint aggregate, and every tier after
-    // the first reads the previous tier's checkpointed RDD.
+    // shape via the tier loop's checkpoint seam (the chain's own config
+    // twin): each exact tier's pre-checkpoint plan carries exactly ITS OWN
+    // fingerprint aggregate, and every tier after the first reads the
+    // previous tier's checkpointed RDD.
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
     import org.apache.spark.sql.functions._
     val base = spark.range(0, 50).selectExpr(
@@ -66,10 +67,11 @@ class BatchPipelineSpec extends AnyFunSuite {
         "CAST(10 + id % 5 AS LONG) AS tok")
       .persist()
     val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
-    val (u, t, n) = BatchPipeline.dedupTierIds(base, df => {
-      plans += df.queryExecution.optimizedPlan
-      df.localCheckpoint()
-    })
+    val Seq(u, t, n) = BatchPipeline.configTwin("/src", "/w", "/j")
+      .tierIds(base, df => {
+        plans += df.queryExecution.optimizedPlan
+        df.localCheckpoint()
+      })
     def aggs(p: LogicalPlan): Int = p.collect { case a: Aggregate => a }.size
     def rddScans(p: LogicalPlan): Int =
       p.collect { case r if r.getClass.getSimpleName == "LogicalRDD" => r }.size
@@ -119,11 +121,12 @@ class BatchPipelineSpec extends AnyFunSuite {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_pipe_ml").toString
     docs.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/documents.parquet")
     val mlWork = java.nio.file.Files.createTempDirectory("graft_pipe_ml_w").toString
-    val chain = BatchPipeline.runChain(spark, srcDir, mlWork)
-    val surv = chain.flagged.where(chain.gateCols.map(_._2).reduce(_ && _))
-      .groupBy(col("lang")).count()
+    val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(spark, srcDir)
+    // no sample: the result's sampled frame is every survivor
+    val res = BatchPipeline.configTwin(srcDir, warcDir, jsonlDir)
+      .copy(sample = None, shards = None).run(spark, mlWork)
+    val surv = res.sampled.groupBy(col("lang")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    chain.base.unpersist(blocking = false)
     // 50 docs per language; PII plants (%53: ids 0,53,106,159) and
     // benchmark leaks (%97: ids 0,97,194) drop their doc exactly once
     // (id 0 carries both — it still drops once); ids mod 4 place the
@@ -134,14 +137,14 @@ class BatchPipelineSpec extends AnyFunSuite {
       s"per-language survivors diverged: $surv")
   }
 
-  test("pii redact policy: rows kept, spans scrubbed, mass conserved, config parity") {
+  test("pii redact policy: rows kept, spans scrubbed, mass conserved") {
     import org.apache.spark.sql.functions._
-    val src = "/root/testdata/sf0.001"
-    val staged = BatchPipeline.stagedOnce(spark, src)
+    val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(spark, src)
     val w1 = java.nio.file.Files.createTempDirectory("graft_pipe_redact").toString
-    val chain = BatchPipeline.runChain(spark, src, w1,
-      staged = Some(staged), piiPolicy = "redact")
-    val funnel = BatchPipeline.chainFunnel(chain).orderBy("stage").collect()
+    // no sample: the result's sampled frame is every survivor
+    val res = BatchPipeline.configTwin(src, warcDir, jsonlDir, piiPolicy = "redact")
+      .copy(sample = None, shards = None).run(spark, w1)
+    val funnel = res.funnel.orderBy("stage").collect()
     val byGate = funnel.map(r => r.getString(1) -> r).toMap
     // redact keeps every row at the pii stage...
     assert(byGate("pii").getAs[Long]("rows_dropped") == 0L)
@@ -160,22 +163,34 @@ class BatchPipelineSpec extends AnyFunSuite {
         s"mass leak between ${a.getString(1)} and ${b.getString(1)}")
     }
     // survivors carry SCRUBBED text: no raw email anywhere, markers present
-    val survivors = chain.flagged
-      .where(chain.gateCols.map(_._2).reduce(_ && _))
-    assert(survivors.where(col("text")
+    assert(res.sampled.where(col("text")
       .rlike(graft.pipeline.Pii.emailRe)).count() == 0L)
-    assert(survivors.where(col("text").contains("<EMAIL>")).count() > 0L)
-    // the CONFIG twin under policy redact replays to a bit-identical funnel
-    val (warcDir, jsonlDir) = staged
-    val spec = BatchPipeline.configTwin(src, warcDir, jsonlDir,
-        piiPolicy = "redact").copy(sample = None, shards = None)
-    val w2 = java.nio.file.Files.createTempDirectory("graft_pipe_redactc").toString
-    val res = graft.pipeline.BatchConfig.fromYaml(spec.toYaml).run(spark, w2)
-    val got = res.funnel.orderBy("stage").collect()
-    got.zip(funnel).foreach { case (g, e) =>
-      assert(g == e, s"redact funnel diverged:\n config: $g\n coded:  $e")
-    }
-    chain.base.unpersist(blocking = false)
+    assert(res.sampled.where(col("text").contains("<EMAIL>")).count() > 0L)
+  }
+
+  test("wds shard leg matches the parquet leg under full and manifest verify") {
+    import org.apache.spark.sql.functions._
+    summary // the parquet leg
+    def funnelRows(f: org.apache.spark.sql.DataFrame) = f.collect().sortBy(_.getInt(0)).toSeq
+    val parquetFunnel = funnelRows(spark.read.parquet(s"$work/funnel.parquet"))
+    // full read-back verify: BatchPipeline.run's wds leg (its default posture)
+    val wFull = java.nio.file.Files.createTempDirectory("graft_pipe_wds").toString
+    val full = BatchPipeline.run(spark, src, wFull, shardFormat = "wds")
+    assert(jsonLong("sampled_rows", full) == jsonLong("sampled_rows"), full)
+    assert(jsonLong("shard_docs", full) == jsonLong("shard_docs"), full)
+    assert(funnelRows(spark.read.parquet(s"$wFull/funnel.parquet")) == parquetFunnel)
+    assert(new java.io.File(s"$wFull/shards").listFiles().exists(_.getName.endsWith(".tar")))
+    // manifest verify: the same twin with ShardSpec.verify = manifest
+    val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(spark, src)
+    val twin = BatchPipeline.configTwin(src, warcDir, jsonlDir)
+    val wds = graft.pipeline.BatchConfig.ShardSpec(32, "wds", Some("text"),
+      meta = Seq("url", "domain"), verify = "manifest")
+    val wMan = java.nio.file.Files.createTempDirectory("graft_pipe_wdsm").toString
+    val res = twin.copy(shards = Some(wds)).run(spark, wMan)
+    assert(res.sampled.count() == jsonLong("sampled_rows"))
+    assert(res.shardManifest.get.agg(sum(col("docs"))).head().getLong(0) ==
+      jsonLong("shard_docs"))
+    assert(funnelRows(res.funnel) == parquetFunnel)
   }
 
   test("artifacts land: datacard, funnel markdown, shard files") {

@@ -44,15 +44,15 @@ object PlanDump {
       }),
       // the composed chain's GATES stage (the q_pipeline_* queries
       // checkpoint it mid-chain, so the returned-frame plan hides it): the
-      // lazy pre-checkpoint gate frame over the chain's own ingest — tier
-      // flags + langid/gopher/pii. Unpersisted here: runChain owns the
-      // persist, so this plan reads the front door where runChain's reads
-      // the cached base.
+      // config twin's lazy pre-checkpoint flags frame over its own ingest
+      // — tier flags + tokens/langid/gopher/pii. Unpersisted here: run
+      // owns the persist, so this plan reads the front door where run's
+      // reads the cached base.
       "q_pipeline_gates" -> (() => {
         val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(s, sfDir)
-        val (base, _, _) = BatchPipeline.ingest(s, warcDir, jsonlDir)
-        val (u, t, nr) = BatchPipeline.dedupTierIds(base)
-        BatchPipeline.gateFlags(base, u, t, nr, redact = false)
+        val twin = BatchPipeline.configTwin(sfDir, warcDir, jsonlDir)
+        val (base, _) = twin.ingest(s)
+        twin.flags(base, twin.tierIds(base))
       }))
   }
 

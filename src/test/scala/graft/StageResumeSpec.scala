@@ -141,26 +141,36 @@ class StageResumeSpec extends AnyFunSuite {
       edited.run(spark, tmp("graft_cfg_r5"), Some(stages))
     }
     assert(e2.getMessage.contains("fingerprint"), e2.getMessage)
-    // a stageDir committed WITHOUT a config fingerprint (the hand-coded
-    // chain's) is foreign — refused, not silently consumed
-    val handStages = tmp("graft_stage_hand")
-    BatchPipeline.run(spark, src, tmp("graft_cfg_hand"), Some(handStages))
+    // a stageDir committed WITHOUT a config fingerprint is foreign —
+    // refused, not silently consumed (checked on BOTH stage legs)
+    val foreign = tmp("graft_stage_foreign")
+    val frame = spark.read.parquet(s"$stages/base")
+    graft.pipeline.Incremental.commitStage(spark, s"$foreign/base", frame,
+      Map("quarantined" -> 4L))
+    graft.pipeline.Incremental.commitStage(spark, s"$foreign/flagged", frame,
+      Map("quarantined" -> 4L))
     val e3 = intercept[IllegalArgumentException] {
-      spec.run(spark, tmp("graft_cfg_r6"), Some(handStages))
+      spec.run(spark, tmp("graft_cfg_r6"), Some(foreign))
     }
     assert(e3.getMessage.contains("fingerprint"), e3.getMessage)
+    rmTree(s"$foreign/flagged")
+    val e4 = intercept[IllegalArgumentException] {
+      spec.run(spark, tmp("graft_cfg_r7"), Some(foreign))
+    }
+    assert(e4.getMessage.contains("fingerprint"), e4.getMessage)
   }
 
   test("resume under a different pii policy is refused, not silently mislabeled") {
     val stages = tmp("graft_stage_pii")
     BatchPipeline.run(spark, src, tmp("graft_sr_pii1"), Some(stages))
     // drop-committed flagged stage + redact request → loud failure (the
-    // committed frame has no tok_raw and its f_pii means something else)
+    // committed frame has no raw weight and its pii flag means something
+    // else): the twin's fingerprint differs
     val e = intercept[IllegalArgumentException] {
       BatchPipeline.run(spark, src, tmp("graft_sr_pii2"), Some(stages),
         piiPolicy = "redact")
     }
-    assert(e.getMessage.contains("piiPolicy"), e.getMessage)
+    assert(e.getMessage.contains("fingerprint"), e.getMessage)
     // same-policy resume still works
     BatchPipeline.run(spark, src, tmp("graft_sr_pii3"), Some(stages))
   }

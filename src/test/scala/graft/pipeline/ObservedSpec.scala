@@ -29,6 +29,24 @@ class ObservedSpec extends AnyFunSuite {
     assert(missing.getMessage.contains("missing"))
   }
 
+  test("longs reads every key in order and fails loudly on a missing or non-Long one") {
+    val obs = observed(count(lit(1)).as("n"), 5)
+    val two = Observation()
+    spark.range(4).observe(two, max(col("id")).as("hi"), count(lit(1)).as("n"))
+      .count()
+    assert(Observed.longs(two, "n", "hi")(fail("fallback ran")) == Seq(4L, 3L))
+    val empty = Observation()
+    spark.range(0).observe(empty, count(lit(1)).as("n"), max(col("id")).as("hi"))
+      .count()
+    assert(Observed.longs(empty, "n", "hi")(fail("fallback ran")) == Seq(0L, 0L))
+    // one good key does not excuse a missing one: no silent 0
+    val missing = intercept[IllegalStateException](
+      Observed.longs(obs, "n", "graft_nodes")(fail("fallback ran")))
+    assert(missing.getMessage.contains("graft_nodes"))
+    val wrong = observed(count(lit(1)).cast("int").as("n"), 5)
+    intercept[IllegalStateException](Observed.longs(wrong, "n")(fail("fallback ran")))
+  }
+
   test("an interrupted read rethrows instead of launching the fallback") {
     val never = Observation() // no action ever completes it
     var fellBack = false
