@@ -312,7 +312,7 @@ class BatchConfigSpec extends AnyFunSuite {
     // validation never touched the (nonexistent) source paths
   }
 
-  test("config run: quarantine artifact, stage walls, sample totals, slim shards") {
+  test("config run: quarantine file, stage walls, sample totals, slim shards") {
     val (warcDir, jsonlDir) = graft.BatchPipeline.stagedOnce(spark, src)
     val qDir = java.nio.file.Files.createTempDirectory("graft_bcfg_q").toString
     val s0 = batchSpec(warcDir, jsonlDir)
