@@ -104,15 +104,10 @@ object Processor {
     }
   }
 
-  /** Same fold as the distributed runner (impl/OverallResult.scala:21-30). */
+  /** Same fold as the distributed runner (impl/OverallResult.scala:21-30);
+   * its one definition is [[graft.functions.RuleOverallFold]]. */
   def overallOf(results: Seq[Int], probablePass: Double): Int = {
-    import RuleResults._
-    results.foldLeft(PassedInt) { (acc, r) =>
-      if (acc == FailedInt) FailedInt
-      else if (r == PassedInt || r == SoftFailedInt || r == DisabledRuleInt) acc
-      else if (r == FailedInt) FailedInt
-      else if (r < probablePass * PassedInt) FailedInt
-      else acc
-    }
+    val a = results.toArray
+    graft.functions.RuleOverallFold.fold(a(_), 0, a.length, probablePass)
   }
 }

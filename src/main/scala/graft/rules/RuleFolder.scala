@@ -44,10 +44,6 @@ object RuleFolder {
         (i, acc)
       }
     }
-    val anyTriggered: Column = ordered
-      .map(i => res(i) === PassedInt)
-      .reduceOption(_ || _)
-      .getOrElse(lit(false))
     val result: Column =
       if (debugMode) {
         val entries = steps.map { case (i, acc) =>
@@ -56,7 +52,10 @@ object RuleFolder {
         }
         if (entries.isEmpty) lit(null) else filter(array(entries: _*), _.isNotNull)
       } else
-        steps.lastOption.map { case (_, acc) => when(anyTriggered, acc) }.getOrElse(lit(null))
+        steps.lastOption.map { case (_, acc) =>
+          // one flat array_contains, not a rule-deep OR chain
+          when(array_contains(array(ordered.map(res): _*), PassedInt), acc)
+        }.getOrElse(lit(null))
 
     df.withColumn(TmpCol, array(RuleRunner.coerced(suite): _*))
       .withColumn(name, struct(

@@ -1,7 +1,6 @@
 package graft.rules
 
-import graft.functions.RuleResultCoerce
-import graft.rules.RuleResults._
+import graft.functions.{RuleOverall, RuleResultCoerce}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -36,28 +35,12 @@ object RuleRunner {
       Bridge.column(RuleResultCoerce(Parsing.parse(r.sql, suite)))
     }
 
-  /** Fold rule-result ints into an overall result
-   * (reference: impl/OverallResult.scala:21-30): Failed dominates,
-   * Soft/Disabled neutral, probability below threshold fails. Unrolled over
-   * a statically known element list: the fold only ever lands on Passed or
-   * Failed, so it reduces to "any element fails ⇒ Failed". Plain
-   * comparisons + OR stay inside whole-stage codegen, where a HOF
-   * `aggregate` fold evaluates its lambda interpreted (it dominated the
-   * flatten hot path: 8 interpreted array folds per row). */
-  private def overallStatic(results: Seq[Column], probablePass: Double): Column =
-    if (results.isEmpty) lit(PassedInt) // empty suite/set: vacuously passed
-    else {
-      val threshold = probablePass * PassedInt
-      val anyFailed = results.map { r =>
-        r =!= PassedInt && r =!= SoftFailedInt && r =!= DisabledRuleInt &&
-          (r === FailedInt || r.cast("double") < threshold)
-      }.reduce(_ || _)
-      when(anyFailed, FailedInt).otherwise(PassedInt)
-    }
-
-  /** Unrolled overall over the first `n` entries of the results array. */
-  private def overallStaticOf(tmp: Column, n: Int, probablePass: Double): Column =
-    overallStatic((1 to n).map(i => element_at(tmp, i)), probablePass)
+  /** Overall of the 0-based range `[from, until)` of the results array: one
+   * [[RuleOverall]] loop node per suite or rule set, however wide
+   * (Failed dominates, Soft/Disabled neutral, probability below threshold
+   * fails; an empty range is vacuously passed). */
+  private def overall(tmp: Column, from: Int, until: Int, probablePass: Double): Column =
+    Bridge.column(RuleOverall(Bridge.expression(tmp), from, until, probablePass))
 
   private val TmpCol = "graft_rr_tmp"
 
@@ -71,20 +54,19 @@ object RuleRunner {
     // global rule index, in ruleSet order — element_at is 1-based
     var idx = 0
     val setEntries: Seq[Column] = suite.ruleSets.flatMap { rs =>
+      val from = idx
       val ruleEntries: Seq[Column] = rs.rules.flatMap { r =>
         idx += 1
         Seq(lit(Id.pack(r.id)), element_at(tmp, idx))
       }
-      val setResults = ruleEntries.grouped(2).map(_.last).toSeq
       Seq(
         lit(Id.pack(rs.id)),
         struct(
-          overallStatic(setResults, suite.probablePass).as("overallResult"),
+          overall(tmp, from, idx, suite.probablePass).as("overallResult"),
           map(ruleEntries: _*).as("ruleResults")))
     }
     val fields = Seq(lit(Id.pack(suite.id)).as("id")) ++
-      (if (withOverall)
-        Seq(overallStaticOf(tmp, idx, suite.probablePass).as("overallResult"))
+      (if (withOverall) Seq(overall(tmp, 0, idx, suite.probablePass).as("overallResult"))
       else Nil) ++
       Seq(map(setEntries: _*).as("ruleSetResults"))
     struct(fields: _*)
@@ -106,7 +88,7 @@ object RuleRunner {
       detailsName: String = "DQ_details"): DataFrame =
     df.withColumn(TmpCol, array(coerced(suite): _*))
       .withColumn(overallName,
-        overallStaticOf(col(TmpCol), suite.rules.size, suite.probablePass))
+        overall(col(TmpCol), 0, suite.rules.size, suite.probablePass))
       .withColumn(detailsName, dqStruct(suite, col(TmpCol), withOverall = false))
       .drop(TmpCol)
 
@@ -282,17 +264,13 @@ object RuleRunner {
           element_at(tmp, idx).as("ruleResult"))
       }
     }
-    var start = 0
-    val withOveralls = suite.ruleSets.zipWithIndex.foldLeft(
-      df.withColumn(TmpCol, array(coerced(suite): _*))
-        .withColumn(suiteOvCol,
-          overallStaticOf(tmp, suite.rules.size, suite.probablePass))) {
-      case (acc, (rs, si)) =>
-        val setIdxs = rs.rules.indices.map(_ + start + 1)
-        start += rs.rules.size
-        acc.withColumn(setOvCol(si),
-          overallStatic(setIdxs.map(i => element_at(tmp, i)), suite.probablePass))
-    }
+    val bounds = suite.ruleSets.scanLeft(0)(_ + _.rules.size)
+    val overalls = (suiteOvCol -> overall(tmp, 0, bounds.last, suite.probablePass)) +:
+      suite.ruleSets.indices.map { si =>
+        setOvCol(si) -> overall(tmp, bounds(si), bounds(si + 1), suite.probablePass)
+      }
+    val withOveralls = df.withColumn(TmpCol, array(coerced(suite): _*))
+      .withColumns(overalls.toMap)
     if (rowCols.isEmpty) {
       // no rules → no flattened rows, but keep the output schema
       val names = Seq("ruleSuiteId", "ruleSuiteVersion", "ruleSuiteResult",

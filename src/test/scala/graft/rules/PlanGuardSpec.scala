@@ -1,6 +1,8 @@
 package graft.rules
 
 import graft.TestSpark
+import graft.functions.RuleOverall
+import org.apache.spark.sql.catalyst.expressions.{Expression, Or}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -152,5 +154,27 @@ class PlanGuardSpec extends AnyFunSuite {
       .select(col("DataQuality.overallResult"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ReadSchema: struct<a:int,b:int>"), s"not pruned:\n$plan")
+  }
+
+  test("400-rule suite folds its overalls in 17 loop nodes, no Or chain") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ov400").toString
+    Seq((1, 2)).toDF("a", "b").write.mode("overwrite").parquet(dir)
+    val wide = RuleSuite(Id(1, 1), (0 until 16).map { s =>
+      RuleSet(Id(100 + s, 1), (0 until 25).map { j =>
+        val i = s * 25 + j
+        Rule(Id(i, 1), if (i % 2 == 0) s"a < $i" else s"CASE WHEN b > $i THEN -1 ELSE 0.9 END")
+      })
+    })
+    val plan = RuleRunner.addDataQuality(spark.read.parquet(dir), wide)
+      .queryExecution.optimizedPlan
+    val exprs = plan.collect { case p => p.expressions }.flatten
+    def count(pf: PartialFunction[Expression, Unit]) =
+      exprs.map(_.collect(pf).size).sum
+    assert(count { case _: RuleOverall => } == 17, s"one per set plus the suite:\n$plan")
+    assert(count { case _: Or => } == 0)
+    // the rules, the results array and the map entries: about 9.8 nodes per
+    // rule (3,929 here), so the overall tree cannot quietly regrow
+    val nodes = count { case _ => }
+    assert(nodes < 12 * 400, s"$nodes expression nodes for 400 rules")
   }
 }

@@ -93,21 +93,85 @@ class RuleRunnerSpec extends AnyFunSuite {
     assert(direct == viaStruct)
   }
 
-  test("wide suites (40 rules) plan and run without blowup") {
-    val wide = RuleSuite(Id(1, 1), Seq(RuleSet(Id(2, 1),
-      (1 to 40).map(i => Rule(Id(i, 1), s"q + $i > $i")))))
+  test("1,000-rule suite runs on a 1 MB stack; overalls equal overallOf") {
+    // 40 sets of 25: booleans, probabilities, soft-fails, disabled rules
+    def sql(i: Int): String = i % 4 match {
+      case 0 => s"q < ${20 + i % 50}"
+      case 1 => s"CASE WHEN t < 0.04 THEN 1.0 ELSE 0.${70 + i % 20} END"
+      case 2 => s"CASE WHEN d <= 0.0${1 + i % 9} THEN 1 ELSE -1 END"
+      case _ => s"CASE WHEN p > ${i % 7} THEN -2 WHEN q < 50 THEN 1 ELSE 0 END"
+    }
+    val wide = RuleSuite(Id(1, 1), (0 until 40).map { s =>
+      RuleSet(Id(1000 + s, 1), (0 until 25).map(j => Rule(Id(s * 25 + j, 1), sql(s * 25 + j))))
+    })
+    assert(wide.rules.size == 1000)
+    val rows = df.withColumn("k", monotonically_increasing_id())
+
+    var failure: Throwable = null
+    var dq: Array[org.apache.spark.sql.Row] = null
+    var split: Map[Long, Int] = null
+    var flat: Set[Seq[Any]] = null
+    var stats: Array[org.apache.spark.sql.Row] = null
+    val run: Runnable = () =>
+      try {
+        dq = RuleRunner.addDataQuality(rows, wide).select("k", "DataQuality").collect()
+        split = RuleRunner.addOverallResultsAndDetails(rows, wide)
+          .select("k", "DQ_overallResult").collect()
+          .map(r => r.getLong(0) -> r.getInt(1)).toMap
+        flat = RuleRunner.addFlattenedResults(rows, wide).collect().map(_.toSeq).toSet
+        stats = RuleRunner.ruleStats(rows, wide).collect()
+      } catch { case t: Throwable => failure = t }
     val t0 = System.nanoTime()
-    val out = RuleRunner.addDataQuality(df, wide)
-      .select(col("DataQuality.overallResult")).as[Int].collect()
-    assert(out.length == 4)
+    val th = new Thread(null, run, "wide", 1L << 20)
+    th.start()
+    th.join()
+    if (failure != null) throw failure
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 60, s"wide suite took ${secs}s")
+
+    import graft.functions.RuleOverallSpec.refOverall
+    val setIds = wide.ruleSets.map(rs => Id.pack(rs.id) -> rs.id).toMap
+    val expectFlat = dq.flatMap { row =>
+      val s = row.getStruct(1)
+      val sets = s.getMap[Long, org.apache.spark.sql.Row](2)
+      val all = sets.values.flatMap(_.getMap[Long, Int](1).values).toSeq
+      assert(all.size == 1000)
+      val suiteOverall = refOverall(all, wide.probablePass)
+      assert(Processor.overallOf(all, wide.probablePass) == suiteOverall)
+      assert(s.getInt(1) == suiteOverall)
+      assert(split(row.getLong(0)) == suiteOverall)
+      sets.toSeq.flatMap { case (setKey, set) =>
+        val results = set.getMap[Long, Int](1)
+        val setOverall = refOverall(results.values.toSeq, wide.probablePass)
+        assert(Processor.overallOf(results.values.toSeq, wide.probablePass) == setOverall)
+        assert(set.getInt(0) == setOverall)
+        results.toSeq.map { case (ruleKey, r) =>
+          val rs = setIds(setKey)
+          Seq(wide.id.id, wide.id.version, suiteOverall, set.getInt(0), rs.id, rs.version,
+            (ruleKey >>> 32).toInt, ruleKey.toInt, r)
+        }
+      }
+    }
+    assert(flat == expectFlat.toSet)
+    // the mix reaches both overall outcomes
+    assert(dq.flatMap(_.getStruct(1).getMap[Long, org.apache.spark.sql.Row](2).values
+      .map(_.getInt(0))).toSet == Set(PassedInt, FailedInt))
+    val all = expectFlat.map(_.last.asInstanceOf[Int])
+    assert(stats.length == 1000)
+    assert(stats.map(_.getAs[Long]("evaluated")).sum == all.size)
+    assert(stats.map(_.getAs[Long]("passed")).sum == all.count(_ == PassedInt))
+    assert(stats.map(_.getAs[Long]("soft_failed")).sum == all.count(_ == SoftFailedInt))
+    assert(stats.map(_.getAs[Long]("disabled")).sum == all.count(_ == DisabledRuleInt))
+    assert(stats.map(_.getAs[Long]("probabilistic")).sum ==
+      all.count(r => r > 0 && r < PassedInt))
+
+    // the engine runs at 40 rules; at 1,000 it is not pinned here
     val engineWide = RuleSuite(Id(1, 1), Seq(RuleSet(Id(2, 1),
       (1 to 40).map(i => Rule(Id(i, 1), s"q > $i",
         Some(OutputExpression(i, Id(100 + i, 1), s"'band$i'")))))))
     val eng = RuleEngine.addRuleEngine(df, engineWide, "re")
       .select(col("re.result")).as[String].collect()
-    assert(eng.length == 4)
-    val secs = (System.nanoTime() - t0) / 1e9
-    assert(secs < 60, s"wide suite took ${secs}s")
+    assert(eng.toSeq == Seq.fill(4)("band1"))
   }
 
   test("coercion edge cases match the reference's token table") {
