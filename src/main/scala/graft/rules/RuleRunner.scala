@@ -182,10 +182,9 @@ object RuleRunner {
     // with DIRECT map lookups into each DQ column — no HOF-built arrays to
     // zip (arrays_zip over the flatten transforms fell out of codegen and
     // measured ~10× slower at bench scale)
-    def packed(i: Id): Long = (i.id.toLong << 32) | (i.version.toLong & 0xffffffffL)
     def passed(dq: String, set: Id, rule: Id) =
-      element_at(element_at(col(s"$dq.ruleSetResults"), lit(packed(set)))
-        .getField("ruleResults"), lit(packed(rule))) === RuleResults.PassedInt
+      element_at(element_at(col(s"$dq.ruleSetResults"), lit(Id.pack(set)))
+        .getField("ruleResults"), lit(Id.pack(rule))) === RuleResults.PassedInt
     val entries = suiteA.ruleSets.map { rsA =>
       val rsB = suiteB.ruleSets.find(_.id.id == rsA.id.id).get
       rsA -> rsB
@@ -214,22 +213,6 @@ object RuleRunner {
         col("a_pass_b_fail"), col("a_fail_b_pass"),
         expr("(a_pass_b_fail + a_fail_b_pass) * 1000000L div nullif(evaluated, 0L)")
           .as("flip_ppm"))
-  }
-
-  /** Details variant (no suite overall). */
-  def flattenRuleResults(details: Column): Column = {
-    val suiteId = details.getField("id")
-    flatten(transform(map_entries(details.getField("ruleSetResults")), se =>
-      transform(map_entries(se.getField("value").getField("ruleResults")), re =>
-        struct(
-          idHi(suiteId).as("ruleSuiteId"),
-          idLo(suiteId).as("ruleSuiteVersion"),
-          se.getField("value").getField("overallResult").as("ruleSetResult"),
-          idHi(se.getField("key")).as("ruleSetId"),
-          idLo(se.getField("key")).as("ruleSetVersion"),
-          idHi(re.getField("key")).as("ruleId"),
-          idLo(re.getField("key")).as("ruleVersion"),
-          re.getField("value").as("ruleResult")))))
   }
 
   /**

@@ -15,46 +15,40 @@ import java.nio.file.{Files, Paths}
   */
 object PlanDump {
 
-  /** Operator-level reconstructions for queries whose RETURNED frame is a
-    * localCheckpoint scan (the checkpoint truncates the interesting plan):
-    * same operator calls as the SparkEntry query minus the final
-    * checkpoint, so the dumped plan is the computation the bench times. */
-  def ops(sfDir: String)(implicit s: SparkSession)
-      : Map[String, () => org.apache.spark.sql.DataFrame] = {
+  /** Operator-level reconstructions for registered queries whose RETURNED
+    * frame is a localCheckpoint scan (the checkpoint truncates the
+    * interesting plan): same operator calls as the registered query minus
+    * the final checkpoint, so the dumped plan is the computation the bench
+    * times. Each name must be a registered query (DriverRegistrySpec). */
+  val ops: Map[String, Harness.Query] = {
     import org.apache.spark.sql.functions._
-    def docs = s.read.parquet(s"$sfDir/documents.parquet")
-    def scoreSet = docs.select(col("doc_id"), concat(col("text"),
-      when(col("doc_id") % 6 === 0, lit(" zzqx9 vvkk7 zzqx9")).otherwise(lit(""))).as("t"))
+    def docs(s: SparkSession, dir: String) = s.read.parquet(s"$dir/documents.parquet")
+    def lm(order: Int)(score: (graft.pipeline.Lm.LmModel, org.apache.spark.sql.DataFrame)
+        => org.apache.spark.sql.DataFrame): Harness.Query = (s, dir) => {
+      val d = docs(s, dir)
+      score(graft.pipeline.Lm.train(d, col("text"), order), graft.driver.Fixtures.lmScoreSet(d))
+    }
     Map(
-      "q_lm_score" -> (() => {
-        val m = graft.pipeline.Lm.train(docs, col("text"), order = 2)
-        graft.pipeline.Lm.score(m, scoreSet, col("doc_id"), col("t"))
-      }),
-      "q_lm5_score" -> (() => {
-        val m = graft.pipeline.Lm.train(docs, col("text"), order = 5)
-        graft.pipeline.Lm.score(m, scoreSet, col("doc_id"), col("t"))
-      }),
-      "q_lm_kn" -> (() => {
-        val m = graft.pipeline.Lm.train(docs, col("text"), order = 3)
-        graft.pipeline.Lm.scoreKn(m, scoreSet, col("doc_id"), col("t"))
-      }),
-      "q_lm_mkn" -> (() => {
-        val m = graft.pipeline.Lm.train(docs, col("text"), order = 3)
-        graft.pipeline.Lm.scoreMkn(m, scoreSet, col("doc_id"), col("t"))
-      }),
-      // the composed chain's GATES stage (the q_pipeline_* queries
-      // checkpoint it mid-chain, so the returned-frame plan hides it): the
-      // config twin's lazy pre-checkpoint flags frame over its own ingest
-      // — tier flags + tokens/langid/gopher/pii. Unpersisted here: run
-      // owns the persist, so this plan reads the front door where run's
-      // reads the cached base.
-      "q_pipeline_gates" -> (() => {
-        val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(s, sfDir)
-        val twin = BatchPipeline.configTwin(sfDir, warcDir, jsonlDir)
-        val (base, _) = twin.ingest(s)
-        twin.flags(base, twin.tierIds(base))
-      }))
+      "q_lm_score" -> lm(2)(graft.pipeline.Lm.score(_, _, col("doc_id"), col("t"))),
+      "q_lm5_score" -> lm(5)(graft.pipeline.Lm.score(_, _, col("doc_id"), col("t"))),
+      "q_lm_kn" -> lm(3)(graft.pipeline.Lm.scoreKn(_, _, col("doc_id"), col("t"))),
+      "q_lm_mkn" -> lm(3)(graft.pipeline.Lm.scoreMkn(_, _, col("doc_id"), col("t"))))
   }
+
+  /** Stages of a registered query dumped on their own, under names of
+    * their own. q_pipeline_gates is the composed chain's GATES stage (the
+    * q_pipeline_* queries checkpoint it mid-chain, so the returned-frame
+    * plan hides it): the config twin's lazy pre-checkpoint flags frame
+    * over its own ingest — tier flags + tokens/langid/gopher/pii.
+    * Unpersisted here: run owns the persist, so this plan reads the front
+    * door where run's reads the cached base. */
+  val stages: Map[String, Harness.Query] = Map(
+    "q_pipeline_gates" -> ((s: SparkSession, sfDir: String) => {
+      val (warcDir, jsonlDir) = BatchPipeline.stagedOnce(s, sfDir)
+      val twin = BatchPipeline.configTwin(sfDir, warcDir, jsonlDir)
+      val (base, _) = twin.ingest(s)
+      twin.flags(base, twin.tierIds(base))
+    }))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -64,8 +58,7 @@ object PlanDump {
     val cores = Harness.envCores
     val spark = Harness.session(cores)
     new java.io.File(outDir).mkdirs()
-    val queries = SparkEntry.queries ++
-      ops(sfDir)(spark).map { case (k, op) => k -> ((_: SparkSession, _: String) => op()) }
+    val queries = SparkEntry.queries ++ ops ++ stages
     Harness.eachQuery(spark, "plandump", sfDir, names, queries) { (name, df) =>
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
