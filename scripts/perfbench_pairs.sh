@@ -35,16 +35,20 @@ run_one() { # side checkout workload seed
   fi
 }
 
-n=0
+# the side that goes first alternates from seed to seed within each
+# workload (and between workloads within a seed)
+i=0
 for seed in "$@"; do
+  w=0
   for wl in $WORKLOADS; do
-    if [ $((n % 2)) -eq 0 ]; then
+    if [ $(((i + w) % 2)) -eq 0 ]; then
       run_one parent "$PARENT" "$wl" "$seed"; run_one change "$CHANGE" "$wl" "$seed"
     else
       run_one change "$CHANGE" "$wl" "$seed"; run_one parent "$PARENT" "$wl" "$seed"
     fi
-    n=$((n + 1))
+    w=$((w + 1))
   done
+  i=$((i + 1))
 done
 
 python3 - "$OUT" <<'EOF'

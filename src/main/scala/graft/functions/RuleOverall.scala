@@ -17,6 +17,14 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
 object RuleOverallFold {
   def threshold(probablePass: Double): Double = probablePass * PassedInt
 
+  /** `d` as a Java expression: a bare `${d}D` does not compile for NaN or
+   * ±Infinity. */
+  def javaDouble(d: Double): String =
+    if (d.isNaN) "Double.NaN"
+    else if (d.isPosInfinity) "Double.POSITIVE_INFINITY"
+    else if (d.isNegInfinity) "Double.NEGATIVE_INFINITY"
+    else s"${d}D"
+
   def fails(r: Int, threshold: Double): Boolean =
     r != PassedInt && r != SoftFailedInt && r != DisabledRuleInt &&
       (r == FailedInt || r < threshold)
@@ -56,13 +64,7 @@ case class RuleOverall(results: Expression, from: Int, until: Int, probablePass:
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val fold = "graft.functions.RuleOverallFold"
-    val t = RuleOverallFold.threshold(probablePass)
-    // a bare `${t}D` does not compile for NaN or ±Infinity
-    val tLit =
-      if (t.isNaN) "Double.NaN"
-      else if (t.isPosInfinity) "Double.POSITIVE_INFINITY"
-      else if (t.isNegInfinity) "Double.NEGATIVE_INFINITY"
-      else s"${t}D"
+    val tLit = RuleOverallFold.javaDouble(RuleOverallFold.threshold(probablePass))
     val i = ctx.freshName("i")
     nullSafeCodeGen(ctx, ev, arr =>
       s"""

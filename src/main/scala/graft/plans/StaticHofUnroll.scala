@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.functions.RuleSetResults
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -35,6 +36,11 @@ import org.apache.spark.sql.types.StringType
  *    kept ONLY if no runtime HOF node survives, i.e. the whole chain folded
  *    to constructors. Otherwise the original plan is returned untouched, so
  *    a generator over genuinely dynamic data never regresses.
+ *
+ * A suite's `ruleSetResults` is one [[RuleSetResults]] node; a map
+ * extraction reading it (map_entries, element_at, map value lookup) reads
+ * the node's `expand` constructor tree instead, so both rewrites see the
+ * per-rule constructors.
  *
  * Registered through GraftExtension, the rule runs inside the operator-
  * optimization fixed point, interleaved with CollapseProject/ColumnPruning/
@@ -85,11 +91,23 @@ object StaticHofUnroll extends Rule[LogicalPlan] {
     })
   }
 
+  /** A map extraction reading a [[RuleSetResults]] node reads the node's
+   * per-rule constructor tree instead, so it folds like any literal map. */
+  private def expandRead(e: Expression): Expression = e match {
+    case MapEntries(rs: RuleSetResults) => MapEntries(rs.expand)
+    case ea @ ElementAt(rs: RuleSetResults, _, _, _) => ea.copy(left = rs.expand)
+    case gm @ GetMapValue(rs: RuleSetResults, _) => gm.copy(child = rs.expand)
+    case other => other
+  }
+
   private def unrollOnce(root: Expression): Expression = root.transformUp {
-    case MapEntries(cm: CreateMap) if cm.keys.nonEmpty && cm.keys.size <= MaxElems =>
-      CreateArray(cm.keys.zip(cm.values).map { case (k, v) =>
-        CreateNamedStruct(Seq(Literal("key"), k, Literal("value"), v))
-      })
+    case me: MapEntries => expandRead(me) match {
+      case MapEntries(cm: CreateMap) if cm.keys.nonEmpty && cm.keys.size <= MaxElems =>
+        CreateArray(cm.keys.zip(cm.values).map { case (k, v) =>
+          CreateNamedStruct(Seq(Literal("key"), k, Literal("value"), v))
+        })
+      case other => other
+    }
     case t @ ArrayTransform(ca: CreateArray, fn: LambdaFunction)
         if ca.children.nonEmpty && ca.children.size <= MaxElems =>
       val inlined = ca.children.zipWithIndex.map { case (e, i) => bind(fn, e, i) }
@@ -218,7 +236,10 @@ object StaticHofUnroll extends Rule[LogicalPlan] {
     if (!idExpr.foldable) return None
     if (idExpr.eval().asInstanceOf[Number].longValue != sV.asInstanceOf[Number].longValue)
       return Some(nullLit)
-    field("ruleSetResults") match {
+    field("ruleSetResults").map {
+      case rs: RuleSetResults => rs.expand
+      case other => other
+    } match {
       case Some(sets: CreateMap) =>
         // dynamic-key bail must be distinguishable from a static miss
         if (sets.keys.exists(k => !k.isInstanceOf[Literal])) return None
@@ -252,7 +273,8 @@ object StaticHofUnroll extends Rule[LogicalPlan] {
       case e @ (_: MapEntries | _: ArrayTransform | _: Flatten) => fixpoint(e)
       case rl: graft.functions.RuleResultLookup if rl.childrenResolved =>
         foldRuleLookup(rl).getOrElse(rl)
-      case ea: ElementAt => foldElementAt(ea).getOrElse(ea)
+      case ea: ElementAt => foldElementAt(ea).getOrElse(expandRead(ea))
+      case gm: GetMapValue => expandRead(gm)
     }
     unrolled.transformUp {
       case g @ Generate(gen, _, _, _, _, p @ Project(projList, pchild))

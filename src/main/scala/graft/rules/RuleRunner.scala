@@ -1,6 +1,6 @@
 package graft.rules
 
-import graft.functions.{RuleOverall, RuleResultCoerce}
+import graft.functions.{RuleOverall, RuleResultCoerce, RuleSetLayout, RuleSetResults}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -49,26 +49,16 @@ object RuleRunner {
   private[rules] def dqStructFrom(suite: RuleSuite, tmp: Column): Column =
     dqStruct(suite, tmp, withOverall = true)
 
-  /** Build the nested DQ struct from the temp results array. */
+  /** Build the nested DQ struct from the temp results array: `id` and
+   * `overallResult` stay plain struct fields (so selecting the overall
+   * prunes to one [[RuleOverall]]), `ruleSetResults` is one
+   * [[RuleSetResults]] node, however wide the suite. */
   private def dqStruct(suite: RuleSuite, tmp: Column, withOverall: Boolean): Column = {
-    // global rule index, in ruleSet order — element_at is 1-based
-    var idx = 0
-    val setEntries: Seq[Column] = suite.ruleSets.flatMap { rs =>
-      val from = idx
-      val ruleEntries: Seq[Column] = rs.rules.flatMap { r =>
-        idx += 1
-        Seq(lit(Id.pack(r.id)), element_at(tmp, idx))
-      }
-      Seq(
-        lit(Id.pack(rs.id)),
-        struct(
-          overall(tmp, from, idx, suite.probablePass).as("overallResult"),
-          map(ruleEntries: _*).as("ruleResults")))
-    }
     val fields = Seq(lit(Id.pack(suite.id)).as("id")) ++
-      (if (withOverall) Seq(overall(tmp, 0, idx, suite.probablePass).as("overallResult"))
+      (if (withOverall) Seq(overall(tmp, 0, suite.rules.size, suite.probablePass).as("overallResult"))
       else Nil) ++
-      Seq(map(setEntries: _*).as("ruleSetResults"))
+      Seq(Bridge.column(RuleSetResults(Bridge.expression(tmp), RuleSetLayout.of(suite)))
+        .as("ruleSetResults"))
     struct(fields: _*)
   }
 

@@ -1,8 +1,9 @@
 package graft.rules
 
 import graft.TestSpark
-import graft.functions.RuleOverall
-import org.apache.spark.sql.catalyst.expressions.{Expression, Or}
+import graft.functions.{RuleOverall, RuleSetResults}
+import org.apache.spark.sql.catalyst.expressions.{Alias, CreateMap, CreateNamedStruct, ElementAt, Expression, Or}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -156,25 +157,54 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(plan.contains("ReadSchema: struct<a:int,b:int>"), s"not pruned:\n$plan")
   }
 
-  test("400-rule suite folds its overalls in 17 loop nodes, no Or chain") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ov400").toString
-    Seq((1, 2)).toDF("a", "b").write.mode("overwrite").parquet(dir)
-    val wide = RuleSuite(Id(1, 1), (0 until 16).map { s =>
+  test("400-rule suite compiles whole-stage in the runner, engine and folder") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wide400").toString
+    (0 until 20).map(i => (i, i * 7 % 500)).toDF("a", "b")
+      .write.mode("overwrite").parquet(dir)
+    val src = spark.read.parquet(dir)
+    // 16 sets of 25; every 100th rule carries an engine and a folder output
+    def wide(output: Int => String) = RuleSuite(Id(1, 1), (0 until 16).map { s =>
       RuleSet(Id(100 + s, 1), (0 until 25).map { j =>
         val i = s * 25 + j
-        Rule(Id(i, 1), if (i % 2 == 0) s"a < $i" else s"CASE WHEN b > $i THEN -1 ELSE 0.9 END")
+        Rule(Id(i, 1),
+          if (i % 2 == 0) s"a < $i" else s"CASE WHEN b > $i THEN -1 ELSE 0.9 END",
+          if (i % 100 == 0) Some(OutputExpression(i, Id(1000 + i, 1), output(i))) else None)
       })
     })
-    val plan = RuleRunner.addDataQuality(spark.read.parquet(dir), wide)
-      .queryExecution.optimizedPlan
-    val exprs = plan.collect { case p => p.expressions }.flatten
-    def count(pf: PartialFunction[Expression, Unit]) =
-      exprs.map(_.collect(pf).size).sum
-    assert(count { case _: RuleOverall => } == 17, s"one per set plus the suite:\n$plan")
-    assert(count { case _: Or => } == 0)
-    // the rules, the results array and the map entries: about 9.8 nodes per
-    // rule (3,929 here), so the overall tree cannot quietly regrow
-    val nodes = count { case _ => }
-    assert(nodes < 12 * 400, s"$nodes expression nodes for 400 rules")
+    val runs = Seq(
+      ("DataQuality", RuleRunner.addDataQuality(src, wide(i => s"'$i'")), Nil),
+      ("re", RuleEngine.addRuleEngine(src, wide(i => s"'band$i'"), "re"), Seq("ruleSuiteResults")),
+      ("rf", RuleFolder.addRuleFolder(src, wide(i => s"set(p = currentResult.p + $i)"),
+        struct(col("a").cast("double").as("p")), "rf"), Seq("ruleSuiteResults")))
+    runs.foreach { case (name, df, path) =>
+      // the DQ struct: its two overalls' inputs and one ruleSetResults node,
+      // no per-rule element_at and no map constructor
+      val column = df.queryExecution.optimizedPlan.collectFirst {
+        case Project(list, _) if list.exists(_.name == name) => list.find(_.name == name).get
+      }.get
+      val dq = path.foldLeft(column.asInstanceOf[Alias].child) { (e, field) =>
+        val cns = e.asInstanceOf[CreateNamedStruct]
+        cns.valExprs(cns.names.map(_.toString).indexOf(field))
+      }
+      def count(pf: PartialFunction[Expression, Unit]) = dq.collect(pf).size
+      assert(count { case _: RuleSetResults => } == 1, s"$name:\n$dq")
+      assert(count { case _: RuleOverall => } == 1, s"$name:\n$dq")
+      assert(count { case _: ElementAt => } == 0, s"$name:\n$dq")
+      assert(count { case _: CreateMap => } == 0, s"$name:\n$dq")
+      assert(count { case _: Or => } == 0, s"$name:\n$dq")
+      // a class that does not compile fails the run instead of falling back
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      try {
+        val plan = df.queryExecution.executedPlan
+        assert(plan.collectFirst { case w: WholeStageCodegenExec => w }.nonEmpty, s"$name:\n$plan")
+        assert(df.select(col(name)).collect().length == 20)
+      } finally spark.conf.unset("spark.sql.codegen.fallback")
+    }
+    // the overall alone still prunes to one loop node
+    val overallOnly = RuleRunner.addDataQuality(src, wide(_ => "1"))
+      .select(col("DataQuality.overallResult")).queryExecution.optimizedPlan
+    val exprs = overallOnly.collect { case p => p.expressions }.flatten
+    assert(exprs.map(_.collect { case _: RuleOverall => }.size).sum == 1, s"$overallOnly")
+    assert(exprs.forall(!_.exists(_.isInstanceOf[RuleSetResults])), s"$overallOnly")
   }
 }

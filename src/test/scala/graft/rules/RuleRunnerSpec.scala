@@ -215,6 +215,53 @@ class RuleRunnerSpec extends AnyFunSuite {
     assert(flat.count() == 0) // no rules → no flattened rows, but no crash
   }
 
+  test("duplicate set or rule ids follow spark.sql.mapKeyDedupPolicy") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dupids").toString
+    Seq(5, -5).toDF("a").write.mode("overwrite").parquet(dir)
+    val dupRule = RuleSuite(Id(1, 1), Seq(RuleSet(Id(2, 1), Seq(
+      Rule(Id(10, 1), "a > 0"), Rule(Id(10, 1), "a > 100")))))
+    val dupSet = RuleSuite(Id(1, 1), Seq(
+      RuleSet(Id(2, 1), Seq(Rule(Id(10, 1), "a > 0"))),
+      RuleSet(Id(2, 1), Seq(Rule(Id(11, 1), "a < 100")))))
+    def sets(s: RuleSuite): Seq[(Int, Int, Seq[(Long, Long, Int)])] =
+      // the whole struct: a map_entries read would unroll the map unbuilt
+      RuleRunner.addDataQuality(spark.read.parquet(dir), s).select("a", "DataQuality")
+        .collect().sortBy(_.getInt(0)).toSeq.map { r =>
+          val dq = r.getStruct(1)
+          (r.getInt(0), dq.getInt(1),
+            dq.getMap[Long, org.apache.spark.sql.Row](2).toSeq.flatMap { case (set, v) =>
+              v.getMap[Long, Int](1).toSeq.map { case (rule, res) => (set, rule, res) }
+            })
+        }
+    def modes[T](body: => T): Seq[T] = Seq(
+      Seq.empty[(String, String)],
+      Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")).map { kv =>
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally kv.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val (set2, r10, r11) = (Id.pack(Id(2, 1)), Id.pack(Id(10, 1)), Id.pack(Id(11, 1)))
+    // the default policy refuses a repeated key when the map is built
+    Seq(dupRule, dupSet).foreach { s =>
+      modes {
+        val e = intercept[org.apache.spark.SparkThrowable](sets(s))
+        assert(e.getCondition == "DUPLICATED_MAP_KEY")
+      }
+    }
+    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    try {
+      // the last value wins; the suite overall still folds every rule
+      modes(sets(dupRule)).foreach { got =>
+        assert(got == Seq((-5, FailedInt, Seq((set2, r10, FailedInt))),
+          (5, FailedInt, Seq((set2, r10, FailedInt)))))
+      }
+      modes(sets(dupSet)).foreach { got =>
+        assert(got == Seq((-5, FailedInt, Seq((set2, r11, PassedInt))),
+          (5, PassedInt, Seq((set2, r11, PassedInt)))))
+      }
+    } finally spark.conf.unset("spark.sql.mapKeyDedupPolicy")
+  }
+
   test("lambda substitution in rules") {
     val s = RuleSuite(Id(1, 1), Seq(RuleSet(Id(2, 1), Seq(
       Rule(Id(3, 1), "within(x, 1, 10)")))),
