@@ -9,8 +9,15 @@
 #   {"side": "parent"|"change", "wl", "seed", "res": <run.py's result line>}
 # or, when a run fails, "error" in place of "res". After the runs it prints
 # one summary line per workload and end-to-end metric to stdout, over every
-# line in $OUT: both medians, change/parent, and in how many pairs the
-# change was lower. With no seeds it only prints the summary of $OUT.
+# line in $OUT: both medians and quartiles (statistics.quantiles, exclusive
+# method), the parent's IQR, change/parent, in how many pairs the change was
+# lower, and two verdicts against the change checkout's BENCHMARK.json:
+#   claim_met     the change is better in at least 9 of 10 pairs (a tie
+#                 counts for neither side) and its median beats the
+#                 parent's by more than the parent's IQR;
+#   within_bound  the change's median is no worse than the parent's by more
+#                 than the metric's relative bound.
+# With no seeds it only prints the summary of $OUT.
 #
 # Each run lasts the benchmark's own run_seconds from the change checkout's
 # BENCHMARK.json. Env: OUT, WORKLOADS (default "rules chain"), TRACE
@@ -51,12 +58,22 @@ for seed in "$@"; do
   i=$((i + 1))
 done
 
-python3 - "$OUT" <<'EOF'
+python3 - "$OUT" "$CHANGE/BENCHMARK.json" <<'EOF'
 import json, statistics, sys
 runs = [json.loads(l) for l in open(sys.argv[1]) if l.strip()]
+spec = {m["name"]: m for m in json.load(open(sys.argv[2]))["end_to_end"]}
 by = {}
 for r in runs:
     by.setdefault((r["wl"], r["seed"]), {})[r["side"]] = r
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4)
+    return q[0], q[2]
+
+
 for wl in sorted({k[0] for k in by}):
     pairs = [v for k, v in sorted(by.items()) if k[0] == wl and len(v) == 2]
     ok = [p for p in pairs if all("res" in s for s in p.values())]
@@ -70,9 +87,19 @@ for wl in sorted({k[0] for k in by}):
             continue
         pm = statistics.median(v[0] for v in vals)
         cm = statistics.median(v[1] for v in vals)
-        print(json.dumps({"wl": wl, "metric": m, "pairs": len(vals),
-                          "parent_median": pm, "change_median": cm,
-                          "ratio": cm / pm if pm else None,
-                          "change_lower": sum(1 for p, c in vals if c < p),
-                          "bad_runs": bad}))
+        pq1, pq3 = quartiles([v[0] for v in vals])
+        cq1, cq3 = quartiles([v[1] for v in vals])
+        line = {"wl": wl, "metric": m, "pairs": len(vals),
+                "parent_median": pm, "change_median": cm,
+                "parent_q1": pq1, "parent_q3": pq3, "change_q1": cq1, "change_q3": cq3,
+                "parent_iqr": pq3 - pq1,
+                "ratio": cm / pm if pm else None,
+                "change_lower": sum(1 for p, c in vals if c < p),
+                "bad_runs": bad}
+        if m in spec:
+            sign = 1 if spec[m]["better"] == "lower" else -1
+            wins = sum(1 for p, c in vals if sign * (p - c) > 0)
+            line["claim_met"] = 10 * wins >= 9 * len(vals) and sign * (pm - cm) > pq3 - pq1
+            line["within_bound"] = sign * (cm - pm) <= spec[m]["bound"] * abs(pm)
+        print(json.dumps(line))
 EOF

@@ -14,10 +14,10 @@ import org.apache.spark.sql.types.StringType
  * and immediately takes it apart again with map_entries/transform/flatten
  * (RuleRunner.flattenResults). Left to run time, every row materializes the
  * intermediate maps and walks them with interpreted lambdas inside the
- * Generate. Unrolled, the chain collapses to the same minimal
- * explode-over-array-of-structs plan RuleRunner.addFlattenedResults emits by
- * hand: rule expressions stay in whole-stage codegen, the intermediate maps
- * never exist, and column pruning reaches the scan.
+ * Generate. Unrolled, the chain collapses to a minimal
+ * explode-over-array-of-structs plan: rule expressions stay in whole-stage
+ * codegen, the intermediate maps never exist, and column pruning reaches
+ * the scan.
  *
  * Two cooperating rewrites (both only touch literal constructors, so data
  * read from tables is never affected):

@@ -1,6 +1,7 @@
 package graft.rules
 
 import graft.functions.{RuleOverall, RuleResultCoerce, RuleSetLayout, RuleSetResults}
+import org.apache.spark.sql.catalyst.expressions.{KnownNotNull, KnownNullable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -114,51 +115,101 @@ object RuleRunner {
           re.getField("value").as("ruleResult")))))
   }
 
+  private val PosCol = "graft_pos"
+
+  /**
+   * The per-rule row source of the reports below: one row per (input row,
+   * rule), from one `posexplode` of the coerced results array. Each row
+   * carries the columns `perRow` builds from the input row (given the
+   * results array; computed once per input row, before the explode), then
+   * the rule's `graft_set`/`graft_set_v`/`graft_rule`/`graft_rule_v` id
+   * halves, its 0-based set index `graft_set_ix`, its 0-based position
+   * `graft_pos` in the results array and its result `graft_res`.
+   * The layout values are literal `int[]`s read at the rule's position, so
+   * the plan grows with the rule count only through the results array, and
+   * a repeated id is one more row under the same key, never a map entry.
+   */
+  private[graft] def perRule(df: DataFrame, suite: RuleSuite)(
+      perRow: Column => Seq[Column]): DataFrame = {
+    val rows = df.withColumn(TmpCol, results(suite))
+      .select(perRow(col(TmpCol)) :+ col(TmpCol): _*)
+    val keep = rows.columns.init.toSeq.map(n => col(s"`$n`"))
+    val indexed = suite.ruleSets.zipWithIndex.flatMap { case (rs, si) => rs.rules.map((rs, si, _)) }
+    def at(f: ((RuleSet, Int, Rule)) => Int): Column =
+      notNull(element_at(lit(indexed.map(f).toArray), col(PosCol) + 1))
+    // an explode of a bare column gets an inferred `size(...) > 0` filter,
+    // which the optimizer pushes below the projection as a second copy of
+    // every rule; the results array is never null or in need of one
+    rows.select(keep :+ posexplode(notNull(col(TmpCol))).as(Seq(PosCol, "graft_res")): _*)
+      .select(keep ++ Seq(
+        at(_._1.id.id).as("graft_set"), at(_._1.id.version).as("graft_set_v"),
+        at(_._3.id.id).as("graft_rule"), at(_._3.id.version).as("graft_rule_v"),
+        at(_._2).as("graft_set_ix"), col(PosCol), col("graft_res")): _*)
+  }
+
+  /** `c`, known never null: the results array, or a read of an array at a
+   * position known to be in bounds. */
+  private def notNull(c: Column): Column =
+    Bridge.column(KnownNotNull(Bridge.expression(c)))
+
+  /** The coerced results array. */
+  private def results(suite: RuleSuite): Column = ints(coerced(suite))
+
+  /** `array(cs)`, typed `array<int>` even when `cs` is empty. */
+  private def ints(cs: Seq[Column]): Column =
+    if (cs.isEmpty) typedLit(Array.empty[Int]) else array(cs: _*)
+
+  /** The outcome counts of a per-rule report over the coerced result `res`:
+   * evaluated, then one count per result class of the encoding
+   * ([[graft.rules.RuleResults]]) — Passed, Failed, SoftFailed,
+   * DisabledRule, and `probabilistic` for anything strictly between Failed
+   * and Passed — so the classes always sum to `evaluated`. */
+  private[graft] def outcomeCounts(res: Column): Seq[Column] = Seq(
+    count(lit(1)).as("evaluated"),
+    count(when(res === RuleResults.PassedInt, 1)).as("passed"),
+    count(when(res === RuleResults.FailedInt, 1)).as("failed"),
+    count(when(res === RuleResults.SoftFailedInt, 1)).as("soft_failed"),
+    count(when(res === RuleResults.DisabledRuleInt, 1)).as("disabled"),
+    count(when(res > 0 && res < RuleResults.PassedInt, 1)).as("probabilistic"))
+
+  /** [[outcomeCounts]]' column names, then the pass rate in exact
+   * parts-per-million over the non-disabled evaluations. */
+  private[graft] val outcomeColumns: Seq[Column] =
+    Seq("evaluated", "passed", "failed", "soft_failed", "disabled", "probabilistic").map(col) :+
+      expr("passed * 1000000L div nullif(evaluated - disabled, 0L)").as("pass_rate_ppm")
+
   /**
    * Per-rule health report — the DQ dashboard row: for every rule in the
-   * suite, how often it ran and how it came out, plus the pass rate in
-   * exact parts-per-million over the non-disabled evaluations. Result
-   * classes follow the encoding ([[graft.rules.RuleResults]]): Passed
-   * 100000, Failed 0, SoftFailed −1, DisabledRule −2, anything strictly
-   * between 0 and 100000 is a probability (counted `probabilistic`; its
-   * mass is NOT folded into passed — gate on [[addDataQuality]]'s overall
-   * with probablePass for that). One evaluation pass + one combining
-   * aggregate keyed by (suite, set, rule) — a handful of groups, no skew.
+   * suite, how often it ran and how it came out ([[outcomeCounts]]), plus
+   * the pass rate in exact parts-per-million over the non-disabled
+   * evaluations. A probability is counted `probabilistic`; its mass is NOT
+   * folded into passed — gate on [[addDataQuality]]'s overall with
+   * probablePass for that. One pass over the [[perRule]] rows + one
+   * combining aggregate keyed by (suite, set, rule) — a handful of groups,
+   * no skew.
    */
   def ruleStats(df: DataFrame, suite: RuleSuite): DataFrame = {
-    val r = addDataQuality(df, suite)
-      .select(explode(flattenResults(col("DataQuality"))).as("graft_r"))
-      .select(col("graft_r.ruleSuiteId").as("suiteId"),
-        col("graft_r.ruleSetId").as("setId"),
-        col("graft_r.ruleId").as("ruleId"),
-        col("graft_r.ruleResult").as("graft_res"))
-    r.groupBy(col("suiteId"), col("setId"), col("ruleId"))
-      .agg(
-        count(lit(1)).as("evaluated"),
-        count(when(col("graft_res") === RuleResults.PassedInt, 1)).as("passed"),
-        count(when(col("graft_res") === RuleResults.FailedInt, 1)).as("failed"),
-        count(when(col("graft_res") === RuleResults.SoftFailedInt, 1)).as("soft_failed"),
-        count(when(col("graft_res") === RuleResults.DisabledRuleInt, 1)).as("disabled"),
-        count(when(col("graft_res") > 0 && col("graft_res") < RuleResults.PassedInt, 1))
-          .as("probabilistic"))
-      .select(col("suiteId"), col("setId"), col("ruleId"), col("evaluated"),
-        col("passed"), col("failed"), col("soft_failed"), col("disabled"),
-        col("probabilistic"),
-        expr("passed * 1000000L div nullif(evaluated - disabled, 0L)").as("pass_rate_ppm"))
+    val counts = outcomeCounts(col("graft_res"))
+    perRule(df, suite)(_ => Nil)
+      .groupBy(lit(suite.id.id).as("suiteId"), col("graft_set").as("setId"),
+        col("graft_rule").as("ruleId"))
+      .agg(counts.head, counts.tail: _*)
+      .select(Seq(col("suiteId"), col("setId"), col("ruleId")) ++ outcomeColumns: _*)
   }
 
   /**
    * SHADOW-compare two suite versions on the same data — the pre-deploy
    * answer to "what would this rule edit do to the corpus?": evaluate
-   * both suites in ONE pass (two projections over the same scan, no
+   * both suites in ONE pass (two results arrays over the same scan, no
    * second read), then report per rule how many rows changed outcome —
    * (setId, ruleId, evaluated, same, a_pass_b_fail, a_fail_b_pass,
    * flip_ppm). Pass means the coerced Passed class, so a probability
    * drifting across the pass line counts as a flip. The suites must
    * share the same rule GRID (same set/rule ids in the same order — the
    * edited-expressions case this exists for); differing grids are
-   * refused loudly rather than mislabeled positionally. One combining
-   * aggregate keyed by rule; rows never shuffle.
+   * refused loudly rather than mislabeled positionally. Each of A's
+   * [[perRule]] rows reads B's result at the same position; one
+   * combining aggregate keyed by rule; rows never shuffle.
    */
   def compareSuites(df: DataFrame, suiteA: RuleSuite, suiteB: RuleSuite): DataFrame = {
     // versions are EXPECTED to differ (an edited rule bumps its version) —
@@ -168,31 +219,10 @@ object RuleRunner {
       "compareSuites needs the same rule grid in both suites (same set/rule " +
         "ids in the same order) — it shadow-tests EDITED rule expressions, " +
         "not added/removed rules")
-    // the grid is a driver-side object: unroll one small struct per rule
-    // with DIRECT map lookups into each DQ column — no HOF-built arrays to
-    // zip (arrays_zip over the flatten transforms fell out of codegen and
-    // measured ~10× slower at bench scale)
-    def passed(dq: String, set: Id, rule: Id) =
-      element_at(element_at(col(s"$dq.ruleSetResults"), lit(Id.pack(set)))
-        .getField("ruleResults"), lit(Id.pack(rule))) === RuleResults.PassedInt
-    val entries = suiteA.ruleSets.map { rsA =>
-      val rsB = suiteB.ruleSets.find(_.id.id == rsA.id.id).get
-      rsA -> rsB
-    }.flatMap { case (rsA, rsB) =>
-      rsA.rules.map { rA =>
-        val rB = rsB.rules.find(_.id.id == rA.id.id).get
-        struct(
-          lit(rsA.id.id).as("setId"), lit(rA.id.id).as("ruleId"),
-          passed("graft_dq_a", rsA.id, rA.id).as("pa"),
-          passed("graft_dq_b", rsB.id, rB.id).as("pb"))
-      }
-    }
-    addDataQuality(addDataQuality(df, suiteA, "graft_dq_a"), suiteB, "graft_dq_b")
-      .select(explode(array(entries: _*)).as("graft_z"))
-      .select(col("graft_z.setId").as("setId"),
-        col("graft_z.ruleId").as("ruleId"),
-        col("graft_z.pa").as("graft_pa"),
-        col("graft_z.pb").as("graft_pb"))
+    perRule(df, suiteA)(_ => Seq(results(suiteB).as("graft_b")))
+      .select(col("graft_set").as("setId"), col("graft_rule").as("ruleId"),
+        (col("graft_res") === RuleResults.PassedInt).as("graft_pa"),
+        (element_at(col("graft_b"), col(PosCol) + 1) === RuleResults.PassedInt).as("graft_pb"))
       .groupBy(col("setId"), col("ruleId"))
       .agg(
         count(lit(1)).as("evaluated"),
@@ -206,54 +236,31 @@ object RuleRunner {
   }
 
   /**
-   * Scale path for flatten-then-aggregate pipelines: produces the exploded
-   * rows DIRECTLY from the results array — ids are per-rule literals, no
-   * intermediate maps, no map_entries transforms — so the generator input is
-   * minimal and downstream column pruning actually applies.
-   * Output schema matches explode(flattenResults(dq)).
+   * Scale path for flatten-then-aggregate pipelines: the [[perRule]] rows
+   * with the suite overall and each row's set overall beside them — both
+   * [[RuleOverall]] columns computed ONCE per input row (the set overalls as
+   * one array read by set index), no intermediate maps, so downstream column
+   * pruning applies. Output schema matches explode(flattenResults(dq)).
    */
   def addFlattenedResults(df: DataFrame, suite: RuleSuite): DataFrame = {
-    import org.apache.spark.sql.functions.{explode, struct}
-    val tmp = col(TmpCol)
-    // suite/set overalls live in their own projected columns so each is
-    // computed ONCE per row; referencing the expression inside every struct
-    // would re-evaluate it per generated element (CollapseProject leaves
-    // non-cheap multi-referenced aliases in their own projection)
-    val suiteOvCol = "graft_ov_suite"
-    val setOvCol = (i: Int) => s"graft_ov_set_$i"
-    var idx = 0
-    val rowCols: Seq[Column] = suite.ruleSets.zipWithIndex.flatMap { case (rs, si) =>
-      rs.rules.map { r =>
-        idx += 1
-        struct(
-          lit(suite.id.id).as("ruleSuiteId"),
-          lit(suite.id.version).as("ruleSuiteVersion"),
-          col(suiteOvCol).as("ruleSuiteResult"),
-          col(setOvCol(si)).as("ruleSetResult"),
-          lit(rs.id.id).as("ruleSetId"),
-          lit(rs.id.version).as("ruleSetVersion"),
-          lit(r.id.id).as("ruleId"),
-          lit(r.id.version).as("ruleVersion"),
-          element_at(tmp, idx).as("ruleResult"))
-      }
-    }
     val bounds = suite.ruleSets.scanLeft(0)(_ + _.rules.size)
-    val overalls = (suiteOvCol -> overall(tmp, 0, bounds.last, suite.probablePass)) +:
-      suite.ruleSets.indices.map { si =>
-        setOvCol(si) -> overall(tmp, bounds(si), bounds(si + 1), suite.probablePass)
-      }
-    val withOveralls = df.withColumn(TmpCol, array(coerced(suite): _*))
-      .withColumns(overalls.toMap)
-    if (rowCols.isEmpty) {
-      // no rules → no flattened rows, but keep the output schema
-      val names = Seq("ruleSuiteId", "ruleSuiteVersion", "ruleSuiteResult",
-        "ruleSetResult", "ruleSetId", "ruleSetVersion", "ruleId", "ruleVersion",
-        "ruleResult")
-      df.where(lit(false)).select(names.map(n => lit(0).as(n)): _*)
-    } else
-      withOveralls
-        .select(explode(array(rowCols: _*)).as("r"))
-        .select("r.*")
+    def overalls(tmp: Column) = Seq(
+      overall(tmp, 0, bounds.last, suite.probablePass).as("graft_ov_suite"),
+      ints(suite.ruleSets.indices.map(si =>
+        overall(tmp, bounds(si), bounds(si + 1), suite.probablePass))).as("graft_ov_sets"))
+    perRule(df, suite)(overalls).select(
+      lit(suite.id.id).as("ruleSuiteId"),
+      lit(suite.id.version).as("ruleSuiteVersion"),
+      col("graft_ov_suite").as("ruleSuiteResult"),
+      notNull(element_at(col("graft_ov_sets"), col("graft_set_ix") + 1)).as("ruleSetResult"),
+      col("graft_set").as("ruleSetId"),
+      col("graft_set_v").as("ruleSetVersion"),
+      col("graft_rule").as("ruleId"),
+      col("graft_rule_v").as("ruleVersion"),
+      // typed as explode(flattenResults(dq)) types it: each rule's result
+      // is an element_at read there, which Spark types nullable
+      (if (suite.rules.isEmpty) col("graft_res")
+      else Bridge.column(KnownNullable(Bridge.expression(col("graft_res"))))).as("ruleResult"))
   }
 
   /** rule_result(results, packedSuiteId, packedSetId, packedRuleId) — works
@@ -286,14 +293,9 @@ object RuleRunner {
       df: DataFrame, suite: RuleSuite, idCol: Column, k: Int = 5): DataFrame = {
     require(k > 0, "k must be positive")
     import graft.functions.dsl.top_k_by
-    import org.apache.spark.sql.functions.{count, explode, lit, posexplode}
-    val flat = addDataQuality(df, suite)
-      .select(idCol.cast(LongType).as("graft_id"),
-        explode(flattenResults(col("DataQuality"))).as("r"))
-      .select(col("graft_id"), col("r.ruleId").as("ruleId"),
-        col("r.ruleResult").as("ruleResult"))
-    flat.where(col("ruleResult") === lit(RuleResults.FailedInt))
-      .groupBy(col("ruleId"))
+    perRule(df, suite)(_ => Seq(idCol.cast(LongType).as("graft_id")))
+      .where(col("graft_res") === lit(RuleResults.FailedInt))
+      .groupBy(col("graft_rule").as("ruleId"))
       .agg(count(lit(1)).as("n_failed"),
         // ord = -id: top_k_by keeps the k LARGEST ord, so the k lowest ids
         top_k_by((-col("graft_id")).cast("double"), col("graft_id"), k)

@@ -19,35 +19,22 @@ object StreamingDq {
     RuleRunner.addDataQuality(stream, suite, name)
 
   /** Windowed PER-RULE health on a live stream — [[RuleRunner.ruleStats]]'
-   * streaming twin: outcome counts + exact-ppm pass rate per (window,
+   * streaming twin: the same outcome counts and exact-ppm pass rate (same
+   * denominator: disabled evaluations don't count against it) per (window,
    * set, rule), one append row each per watermark-closed window. A rule
    * whose live pass rate dives tells the operator WHICH gate the intake
    * is failing while it happens, not at the nightly batch report. */
   def windowedRuleStats(
       stream: DataFrame, suite: RuleSuite,
-      tsCol: String, windowDuration: String, watermark: String): DataFrame =
-    withDataQuality(stream, suite)
-      .withWatermark(tsCol, watermark)
-      .select(col(tsCol),
-        explode(RuleRunner.flattenResults(col("DataQuality"))).as("graft_r"))
+      tsCol: String, windowDuration: String, watermark: String): DataFrame = {
+    val counts = RuleRunner.outcomeCounts(col("graft_res"))
+    RuleRunner.perRule(stream.withWatermark(tsCol, watermark), suite)(_ => Seq(col(tsCol)))
       .groupBy(window(col(tsCol), windowDuration),
-        col("graft_r.ruleSetId").as("setId"), col("graft_r.ruleId").as("ruleId"))
-      .agg(
-        count(lit(1)).as("evaluated"),
-        count(when(col("graft_r.ruleResult") === graft.rules.RuleResults.PassedInt, 1))
-          .as("passed"),
-        count(when(col("graft_r.ruleResult") === graft.rules.RuleResults.FailedInt, 1))
-          .as("failed"),
-        count(when(col("graft_r.ruleResult") === graft.rules.RuleResults.SoftFailedInt, 1))
-          .as("soft_failed"),
-        count(when(col("graft_r.ruleResult") === graft.rules.RuleResults.DisabledRuleInt, 1))
-          .as("disabled"))
-      .select(col("window.start").as("window_start"), col("setId"), col("ruleId"),
-        col("evaluated"), col("passed"), col("failed"), col("soft_failed"),
-        col("disabled"),
-        // same denominator as the batch twin RuleRunner.ruleStats: disabled
-        // evaluations don't count against the pass rate, live or batch
-        expr("passed * 1000000L div nullif(evaluated - disabled, 0L)").as("pass_rate_ppm"))
+        col("graft_set").as("setId"), col("graft_rule").as("ruleId"))
+      .agg(counts.head, counts.tail: _*)
+      .select(Seq(col("window.start").as("window_start"), col("setId"), col("ruleId")) ++
+        RuleRunner.outcomeColumns: _*)
+  }
 
   /**
    * Streaming exact dedup on a content fingerprint: keeps the FIRST arrival

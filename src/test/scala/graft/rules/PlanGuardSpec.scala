@@ -2,10 +2,11 @@ package graft.rules
 
 import graft.TestSpark
 import graft.functions.{RuleOverall, RuleSetResults}
-import org.apache.spark.sql.catalyst.expressions.{Alias, CreateMap, CreateNamedStruct, ElementAt, Expression, Or}
-import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.catalyst.expressions.{Alias, CreateMap, CreateNamedStruct, ElementAt, Expression, Or, PosExplode}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Project}
+import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape guards: the DQ hot path must stay inside whole-stage codegen
@@ -206,5 +207,66 @@ class PlanGuardSpec extends AnyFunSuite {
     val exprs = overallOnly.collect { case p => p.expressions }.flatten
     assert(exprs.map(_.collect { case _: RuleOverall => }.size).sum == 1, s"$overallOnly")
     assert(exprs.forall(!_.exists(_.isInstanceOf[RuleSetResults])), s"$overallOnly")
+  }
+
+  test("the per-rule reports read the results array through one posexplode at any width") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reports_plan").toString
+    (0 until 20).map(i => (i.toLong, i, i * 7 % 500, new java.sql.Timestamp(i * 60000L)))
+      .toDF("id", "a", "b", "ts").write.mode("overwrite").parquet(dir)
+    val src = spark.read.parquet(dir)
+    // sets of 25 rules, half comparisons, half CASE expressions
+    def wide(n: Int, v: Int) = RuleSuite(Id(1, v), (0 until (n + 24) / 25).map { s =>
+      RuleSet(Id(100 + s, v), (s * 25 until math.min(n, s * 25 + 25)).map { i =>
+        Rule(Id(i, v), if (i % 2 == 0) s"a < ${i + v}" else s"CASE WHEN b > $i THEN -1 ELSE 0.9 END")
+      })
+    })
+    def reports(n: Int): Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "ruleStats" -> RuleRunner.ruleStats(src, wide(n, 1)),
+      "failureExamples" -> RuleRunner.failureExamples(src, wide(n, 1), col("id")),
+      "compareSuites" -> RuleRunner.compareSuites(src, wide(n, 1), wide(n, 2)),
+      "addFlattenedResults" -> RuleRunner.addFlattenedResults(src, wide(n, 1)),
+      "windowedRuleStats" -> graft.streaming.StreamingDq.windowedRuleStats(
+        src, wide(n, 1), "ts", "1 hour", "1 hour"))
+    // per report: Generates reading a results array, all Generates,
+    // struct constructors
+    def shape(plan: LogicalPlan): (Int, Int, Int) = {
+      val gens = plan.collect { case g: Generate => g.generator }
+      val exprs = plan.collect { case p => p.expressions }.flatten
+      assert(exprs.forall(!_.exists {
+        case _: RuleSetResults | _: CreateMap => true
+        case _ => false
+      }), s"a map survived:\n$plan")
+      (gens.count {
+        case PosExplode(c) => c.dataType.isInstanceOf[ArrayType] &&
+          c.dataType.asInstanceOf[ArrayType].elementType == IntegerType
+        case _ => false
+      }, gens.size, exprs.map(_.collect { case _: CreateNamedStruct => }.size).sum)
+    }
+    // each rule appears once: no inferred filter copies the results array
+    def coerced(plan: LogicalPlan): Int = plan.collect { case p => p.expressions }.flatten
+      .map(_.collect { case _: graft.functions.RuleResultCoerce => }.size).sum
+    reports(10).zip(reports(1000)).foreach { case ((name, narrow), (_, wider)) =>
+      val (n, w) = (shape(narrow.queryExecution.optimizedPlan),
+        shape(wider.queryExecution.optimizedPlan))
+      assert(n._1 == 1, s"$name at 10 rules:\n${narrow.queryExecution.optimizedPlan}")
+      // failureExamples' second Generate explodes each rule's top-k ids
+      assert(n._2 == (if (name == "failureExamples") 2 else 1), s"$name: $n")
+      assert(n == w, s"$name: 10 rules $n, 1,000 rules $w")
+      assert(coerced(wider.queryExecution.optimizedPlan) ==
+        (if (name == "compareSuites") 2000 else 1000), name)
+    }
+    // the results array alone passes 64 KB near 600 rules
+    // (artifacts/codegen_width_probe.txt); at 400 both compile whole-stage
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try reports(400).filter(r => Set("ruleStats", "addFlattenedResults")(r._1)).foreach {
+      case (name, df) =>
+        assert(df.collect().length == (if (name == "ruleStats") 400 else 20 * 400))
+        val plan = df.queryExecution.executedPlan
+        object Stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+        assert(Stages.find(plan) {
+          case w: WholeStageCodegenExec => w.exists(_.isInstanceOf[GenerateExec])
+          case _ => false
+        }.nonEmpty, s"$name:\n$plan")
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 }
